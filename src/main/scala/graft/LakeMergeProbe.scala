@@ -11,7 +11,9 @@ package graft
   * wall and a constant rewrite count as files grow is the claim,
   * measured. A second leg times [[LakeVersions.appendsBetween]] on
   * the same lakes: incremental consumption must read the added files
-  * alone, so its wall must track the DELTA, not the table.
+  * alone, so its wall must track the DELTA, not the table. The base
+  * commit's own wall is printed too: it records footer stats for every
+  * landed file, so it is the many-file commit path at 16-1,024 files.
   *
   * {{{ sbt "runMain graft.LakeMergeProbe" }}}
   */
@@ -22,9 +24,9 @@ object LakeMergeProbe {
       import org.apache.spark.sql.functions._
       import spark.implicits._
       val rowsPerFile = 4000
-      Seq(16, 64, 256).foreach { nFiles =>
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-lake-merge").toString + "/table"
+      Seq(16, 64, 256, 1024).foreach { nFiles =>
+        val root = java.nio.file.Files.createTempDirectory("graft-lake-merge")
+        val dir = root.toString + "/table"
         val n = nFiles * rowsPerFile
         // one commit, range-partitioned into nFiles sorted files with
         // tight disjoint envelopes — the layout a sorted rewrite makes
@@ -33,8 +35,10 @@ object LakeMergeProbe {
             concat(lit("row"), col("id")).as("t"))
           .repartitionByRange(nFiles, col("k"))
           .sortWithinPartitions("k")
+        val c = System.nanoTime()
         graft.sources.LakeVersions.commit(spark, dir, base,
           statsCols = Seq("k")): Unit
+        val commitMs = (System.nanoTime() - c) / 1e6
         // FIXED delta: one file's key span replaced + 1000 fresh
         // inserts past the max — independent of nFiles
         val lo = (nFiles / 2) * rowsPerFile
@@ -58,8 +62,10 @@ object LakeMergeProbe {
         val incrMs = (System.nanoTime() - b) / 1e6
         require(incr == 1000L, s"incremental read saw $incr rows")
         println(f"[lake-merge] files=$nFiles%4d rows=$n%8d  " +
+          f"commit=$commitMs%8.1f ms  " +
           f"merge=$mergeMs%8.1f ms  rewritten=$rewritten%2d " +
           f"carried=$carried%4d  incr(1k rows)=$incrMs%7.1f ms")
+        org.apache.hadoop.fs.FileUtil.fullyDelete(root.toFile): Unit
       }
     } finally spark.stop()
   }

@@ -23,9 +23,11 @@ object TextAnalysis {
     * marker sets, "en" (= [[EnglishStopwords]]) first. EVERY signal below
     * keys its [[graft.plans.TokenStats]] on this ONE list so that any
     * combination of signals in a projection builds byte-identical
-    * subtrees — whole-stage codegen's subexpression elimination then
+    * subtrees — the UnsafeProjection's subexpression elimination then
     * evaluates the fused pass ONCE per row no matter how many signals a
-    * query derives (q_textstats derives seven). */
+    * query derives (q_textstats derives seven). TokenStats is a
+    * CodegenFallback, so the projection that holds it runs outside
+    * whole-stage codegen, its sibling expressions included. */
   private lazy val StdProfiles: Seq[Seq[String]] = LangProfiles.map(_._2)
 
   /** One fused pass over the text (see [[graft.plans.TokenStats]]):

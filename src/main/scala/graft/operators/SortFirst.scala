@@ -95,7 +95,9 @@ object SortFirst {
     * plan has no exchange, so finalizing it schedules nothing. Inputs
     * with joins/aggregates/repartitions pass through unchanged: their
     * downstream parallelism already comes from an exchange, so widening
-    * buys nothing there anyway. */
+    * buys nothing there anyway. A streaming frame passes through
+    * unchanged: its relation is a leaf too, but `df.rdd` on it throws,
+    * and a stream's parallelism is the source's to set. */
   def widenScanSide(df: DataFrame): DataFrame = {
     def scanSide(p: LogicalPlan): Boolean = p match {
       case Project(_, c) => scanSide(c)
@@ -104,6 +106,7 @@ object SortFirst {
       case leaf if leaf.children.isEmpty => true
       case _ => false
     }
-    if (scanSide(df.queryExecution.analyzed)) widen(df) else df
+    if (!df.isStreaming && scanSide(df.queryExecution.analyzed)) widen(df)
+    else df
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
 /** Versioned commits over a parquet lake — a table format "lite": the
   * last missing piece between "a directory of parquet files" and a
@@ -61,10 +61,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale shape: a commit's driver-side work is one manifest write plus
   * one lock create — O(files) text lines, no listing of the lake
-  * (footer stats, when requested, are one distributed map over the
-  * commit's OWN files); a read costs one manifest read; only
-  * [[vacuum]] ever lists the data directory. Paths are RELATIVE, so a
-  * lake can be relocated or mirrored wholesale. */
+  * (footer stats, when requested, are read on the driver from the
+  * commit's OWN files while they land, defaultParallelism at a time);
+  * a read costs one manifest read; only [[vacuum]] ever lists the
+  * data directory. Paths are RELATIVE, so a lake can be relocated or
+  * mirrored wholesale. Every Spark job a commit starts touches data:
+  * an append or a compaction is its one write job, a delete or an
+  * update one hit-file probe plus the write, and a merge adds the
+  * source materialization and one aggregate over it. */
 object LakeVersions {
 
   private val VersionsDir = "_graft_versions"
@@ -403,75 +407,72 @@ object LakeVersions {
     if (v == 0L) "" else readHeader(fs, lake, v)._3
   }
 
-  /** Distributed footer scan of the commit's own landed files: one
-    * task per file, KBs of metadata each — (rows, per-column min/max
-    * over non-null values; a column any of whose row groups lacks
-    * stats yields no envelope, so readers keep the file). Int/long
-    * columns record exact envelopes; string columns record
-    * [[truncateEnvelope]]'s sound truncated bounds. */
-  private def footerStats(spark: SparkSession, lake: HPath,
-                          relpaths: Seq[String], statsCols: Seq[String],
-                          strCols: Set[String])
-      : Map[String, (Long, Map[String, (Long, Long)],
-                     Map[String, (String, Option[String])])] = {
+  private type FooterStats =
+    (Long, Map[String, (Long, Long)], Map[String, (String, Option[String])])
+  private val NoFooterStats: FooterStats = (-1L, Map.empty, Map.empty)
+
+  /** One landed file's footer, read on the driver — KBs of metadata:
+    * (rows, per-column min/max over non-null values; a column any of
+    * whose row groups lacks stats yields no envelope, so readers keep
+    * the file). Int/long columns record exact envelopes; string
+    * columns record [[truncateEnvelope]]'s sound truncated bounds.
+    * [[commitCore]] calls it from its landing walk, on a bounded pool,
+    * so a commit's stats cost no Spark job. */
+  private def footerStats(conf: org.apache.hadoop.conf.Configuration,
+                          base: String, rel: String, colSet: Set[String],
+                          strCols: Set[String]): FooterStats = {
     import scala.jdk.CollectionConverters._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val base = lake.toString
-    val colSet = statsCols.toSet
-    spark.sparkContext.parallelize(relpaths, relpaths.size).map { rel =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new HPath(s"$base/$rel"), conf.value)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val blocks = r.getFooter.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        def asLong(v: Any): Long = v match {
-          case l: java.lang.Long    => l.longValue
-          case i: java.lang.Integer => i.longValue
-          case other => throw new IllegalStateException(
-            s"LakeVersions: non-integer footer stat $other in $rel")
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new HPath(s"$base/$rel"), conf)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try {
+      val blocks = r.getFooter.getBlocks.asScala.toSeq
+      val rows = blocks.map(_.getRowCount).sum
+      def asLong(v: Any): Long = v match {
+        case l: java.lang.Long    => l.longValue
+        case i: java.lang.Integer => i.longValue
+        case other => throw new IllegalStateException(
+          s"LakeVersions: non-integer footer stat $other in $rel")
+      }
+      def asBytes(v: Any): Array[Byte] = v match {
+        case b: org.apache.parquet.io.api.Binary => b.getBytes
+        case other => throw new IllegalStateException(
+          s"LakeVersions: non-binary footer stat $other in $rel")
+      }
+      // per column: the usable non-null chunk statistics, or None if
+      // any chunk's stats are absent/omitted (conservative: no
+      // envelope at all). Partition columns are not IN the files —
+      // absent is fine; Statistics.isEmpty distinguishes OMITTED
+      // stats (no info — parquet-mr returns an empty object for
+      // legacy corrupt-stats files) from a genuine all-null chunk
+      // (whose numNulls IS set): only the latter may be excluded
+      // from the envelope; the former must void it.
+      def usableChunks(c: String) = {
+        val chunks = blocks.flatMap(_.getColumns.asScala
+          .find(_.getPath.toDotString == c))
+        val usable = chunks.forall(ch =>
+          ch.getStatistics != null && !ch.getStatistics.isEmpty)
+        val nonNull = chunks.filter(ch =>
+          ch.getStatistics != null && ch.getStatistics.hasNonNullValue)
+        if (chunks.isEmpty || !usable || nonNull.isEmpty) None
+        else Some(nonNull)
+      }
+      val num = (colSet -- strCols).flatMap { c =>
+        usableChunks(c).map(nn => c -> (
+          nn.map(ch => asLong(ch.getStatistics.genericGetMin)).min,
+          nn.map(ch => asLong(ch.getStatistics.genericGetMax)).max))
+      }.toMap
+      val str = (colSet intersect strCols).flatMap { c =>
+        usableChunks(c).map { nn =>
+          val mins = nn.map(ch => asBytes(ch.getStatistics.genericGetMin))
+          val maxs = nn.map(ch => asBytes(ch.getStatistics.genericGetMax))
+          c -> truncateEnvelope(
+            mins.reduce((a, b) => if (compareUtf8(a, b) <= 0) a else b),
+            maxs.reduce((a, b) => if (compareUtf8(a, b) >= 0) a else b))
         }
-        def asBytes(v: Any): Array[Byte] = v match {
-          case b: org.apache.parquet.io.api.Binary => b.getBytes
-          case other => throw new IllegalStateException(
-            s"LakeVersions: non-binary footer stat $other in $rel")
-        }
-        // per column: the usable non-null chunk statistics, or None if
-        // any chunk's stats are absent/omitted (conservative: no
-        // envelope at all). Partition columns are not IN the files —
-        // absent is fine; Statistics.isEmpty distinguishes OMITTED
-        // stats (no info — parquet-mr returns an empty object for
-        // legacy corrupt-stats files) from a genuine all-null chunk
-        // (whose numNulls IS set): only the latter may be excluded
-        // from the envelope; the former must void it.
-        def usableChunks(c: String) = {
-          val chunks = blocks.flatMap(_.getColumns.asScala
-            .find(_.getPath.toDotString == c))
-          val usable = chunks.forall(ch =>
-            ch.getStatistics != null && !ch.getStatistics.isEmpty)
-          val nonNull = chunks.filter(ch =>
-            ch.getStatistics != null && ch.getStatistics.hasNonNullValue)
-          if (chunks.isEmpty || !usable || nonNull.isEmpty) None
-          else Some(nonNull)
-        }
-        val num = (colSet -- strCols).flatMap { c =>
-          usableChunks(c).map(nn => c -> (
-            nn.map(ch => asLong(ch.getStatistics.genericGetMin)).min,
-            nn.map(ch => asLong(ch.getStatistics.genericGetMax)).max))
-        }.toMap
-        val str = (colSet intersect strCols).flatMap { c =>
-          usableChunks(c).map { nn =>
-            val mins = nn.map(ch => asBytes(ch.getStatistics.genericGetMin))
-            val maxs = nn.map(ch => asBytes(ch.getStatistics.genericGetMax))
-            c -> truncateEnvelope(
-              mins.reduce((a, b) => if (compareUtf8(a, b) <= 0) a else b),
-              maxs.reduce((a, b) => if (compareUtf8(a, b) >= 0) a else b))
-          }
-        }.toMap
-        rel -> (rows, num, str)
-      } finally r.close()
-    }.collect().toMap
+      }.toMap
+      (rows, num, str)
+    } finally r.close()
   }
 
   /** Commit `df` as the next version. `overwrite=false` (append): the
@@ -489,7 +490,8 @@ object LakeVersions {
     *    could not prune coherently).
     *  - `statsCols`: int/long columns to record per-file min/max for
     *    (plus row counts) — the [[readPruned]] index. Footer-exact,
-    *    one distributed metadata task per landed file.
+    *    one driver-side footer read per landed file, overlapped with
+    *    the landing renames; no Spark job.
     *  - `tag`: idempotence marker stored in the manifest header (see
     *    [[tagOf]]).
     *  - `expectedLatest`: optimistic concurrency for REWRITE commits —
@@ -616,10 +618,21 @@ object LakeVersions {
     val writer = df.write.mode("overwrite")
     (if (tablePartBy.nonEmpty) writer.partitionBy(tablePartBy: _*) else writer)
       .parquet(staging.toString)
+    // footer stats ride the landing walk: each file's footer is read
+    // on the driver as soon as it is renamed, on a pool as wide as
+    // defaultParallelism (one reader at a time loses to a one-task-per-
+    // file Spark job once a commit lands hundreds of files) — no job
+    val colSet = statsCols.toSet
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val statsPool =
+      if (statsCols.isEmpty) None
+      else Some(java.util.concurrent.Executors.newFixedThreadPool(
+        math.max(1, spark.sparkContext.defaultParallelism)))
     // walk staging recursively: partitioned writes nest the data files
     // under col=value dirs, and the partition-qualified RELPATH is what
     // the manifest records (it IS the partition-value index)
-    val landed = Seq.newBuilder[(String, Long)]
+    val landed = Seq.newBuilder[
+      (String, Long, Option[java.util.concurrent.Future[FooterStats]])]
     def walk(p: HPath, relDir: String): Unit =
       fs.listStatus(p).foreach { s =>
         val n = s.getPath.getName
@@ -638,23 +651,23 @@ object LakeVersions {
           fs.mkdirs(dest.getParent)
           require(fs.rename(s.getPath, dest),
             s"LakeVersions.commit: landing rename failed for ${s.getPath}")
-          landed += ((rel, s.getLen))
+          landed += ((rel, s.getLen, statsPool.map(_.submit[FooterStats](() =>
+            footerStats(hconf, lake.toString, rel, colSet, strStatCols)))))
         }
       }
-    walk(staging, "")
-    fs.delete(staging, true): Unit
-    val landedFiles = landed.result()
-    val fileStats =
-      if (statsCols.isEmpty || landedFiles.isEmpty)
-        Map.empty[String, (Long, Map[String, (Long, Long)],
-          Map[String, (String, Option[String])])]
-      else footerStats(spark, lake, landedFiles.map(_._1), statsCols, strStatCols)
-    val newFiles = landedFiles.map { case (rel, len) =>
-      val (rows, st, sst) = fileStats.getOrElse(rel,
-        (-1L, Map.empty[String, (Long, Long)],
-          Map.empty[String, (String, Option[String])]))
-      FileEntry(rel, len, rows, st, sst)
-    }
+    val newFiles =
+      try {
+        walk(staging, "")
+        fs.delete(staging, true): Unit
+        landed.result().map { case (rel, len, stats) =>
+          val (rows, st, sst) = stats.fold(NoFooterStats) { f =>
+            try f.get()
+            catch { case e: java.util.concurrent.ExecutionException =>
+              throw e.getCause }
+          }
+          FileEntry(rel, len, rows, st, sst)
+        }
+      } finally statsPool.foreach(_.shutdownNow())
     localCommitLock.synchronized {
       val lock = new HPath(versionsPath(lake), "LOCK")
       val deadline = System.currentTimeMillis() + lockWaitMs
@@ -1072,7 +1085,9 @@ object LakeVersions {
     * input_file_name()) actually touch? Shared by [[deleteWhere]] /
     * [[updateWhere]] / [[mergeInto]] — each refuses an unprovable
     * relpath outright: silently carrying a hit file by reference
-    * would resurrect deleted rows / drop an update.
+    * would resurrect deleted rows / drop an update. One Spark job and
+    * no shuffle: partitions dedupe their own file names and the driver
+    * unions them.
     *
     * Callers must add [[HitFileCol]] AFTER their scan-prunable
     * filters but BEFORE any join: projecting the nondeterministic
@@ -1089,23 +1104,29 @@ object LakeVersions {
     val (fs, lake) = fsFor(spark, dir)
     val lakeUri = fs.makeQualified(lake).toUri.getPath.stripSuffix("/")
     val manifestRels = m.files.map(_.relpath).toSet
-    hits.select(HitFileCol).distinct().collect().map { r =>
+    // not distinct(): it would add an exchange (and, under AQE, a
+    // second job) to shrink a result that is at most a few names per
+    // partition already
+    val matched = hits.select(HitFileCol).as(Encoders.STRING)
+      .mapPartitions(it => it.toSet.iterator)(Encoders.STRING)
+      .collect().toSet
+    matched.map { f =>
       // input_file_name() returns the URL-ENCODED path (a physical
       // dir 'p=a%3Ab' — itself hive-escaped — arrives as
       // 'p=a%253Ab'); decode ONCE via URI to recover the on-disk
       // name the manifest records
-      val decoded = java.net.URI.create(r.getString(0)).getPath
+      val decoded = java.net.URI.create(f).getPath
       val rel =
         if (decoded.startsWith(s"$lakeUri/"))
           decoded.substring(lakeUri.length + 1)
         else throw new IllegalStateException(
-          s"LakeVersions.$op: matched file ${r.getString(0)} " +
+          s"LakeVersions.$op: matched file $f " +
             s"outside lake root $lakeUri")
       require(manifestRels(rel),
         s"LakeVersions.$op: matched file $rel is not in the " +
           s"pinned manifest — path decoding drifted; refusing a silent no-op")
       rel
-    }.toSet
+    }
   }
 
   /** Row-level DELETE as a versioned commit — the takedown/GDPR op a
@@ -1262,7 +1283,8 @@ object LakeVersions {
     * targets an existing table, same as every table format. */
   def mergeInto(spark: SparkSession, dir: String, source: DataFrame,
                 keyCols: Seq[String]): (Long, Int, Int) = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
+    import org.apache.spark.sql.functions.{col, count, count_distinct,
+      input_file_name, lit, max, min, when}
     require(keyCols.nonEmpty, "LakeVersions.mergeInto: no key columns")
     val v = latestVersion(spark, dir)
     // the RESOLVED schema: a legacy v2 header can be narrower than the
@@ -1294,18 +1316,35 @@ object LakeVersions {
     // one materialization: probe, anti-join and write see the same rows
     val src = source.select(tableCols.toSeq.map(c => col(c._1)): _*)
       .localCheckpoint(true)
-    if (src.head(1).isEmpty) return (v, 0, m.files.size)
-    // only NON-null-keyed groups can be ambiguous: a null key never
-    // matches anything (both rows just insert), so two null-keyed CDC
-    // records are legal — grouping them together would refuse a batch
-    // of yet-unkeyed inserts as "duplicates"
-    val dup = src.filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).limit(1).collect()
-    require(dup.isEmpty,
+    // every question about the batch is answered by ONE aggregate over
+    // the materialized rows:
+    //  - its size: an empty batch is a no-op;
+    //  - duplicate keys: only NON-null keys can be ambiguous — a null
+    //    key never matches anything (both rows just insert), so two
+    //    null-keyed CDC records are legal. count(DISTINCT k1, k2, ...)
+    //    skips every tuple holding a null, so a non-null key repeats
+    //    exactly when it falls short of the non-null-keyed row count;
+    //  - the int/long keys' envelope, which bounds the probe scan below
+    val intLikeKeys = keyCols.filter(k => srcTypes(k) match {
+      case org.apache.spark.sql.types.IntegerType |
+           org.apache.spark.sql.types.LongType => true
+      case _ => false
+    })
+    val keysNonNull = keyCols.map(col(_).isNotNull).reduce(_ && _)
+    val batchAggs = Seq(count(lit(1)), count(when(keysNonNull, lit(1))),
+      count_distinct(col(keyCols.head), keyCols.tail.map(col): _*)) ++
+      intLikeKeys.flatMap(k => Seq(min(k), max(k)))
+    val batch = src.agg(batchAggs.head, batchAggs.tail: _*).head()
+    if (batch.getLong(0) == 0L) return (v, 0, m.files.size)
+    // the group-by runs only to name an example key in the refusal
+    require(batch.getLong(1) == batch.getLong(2), {
+      val dup = src.filter(keysNonNull)
+        .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
+        .filter(col("n") > 1).limit(1).collect().head
       s"LakeVersions.mergeInto: source has duplicate keys (e.g. " +
-        s"${keyCols.zip(dup.head.toSeq).map { case (k, x) => s"$k=$x" }.mkString(", ")}) — " +
-        "which row wins is ambiguous; dedup the CDC batch first")
+        s"${keyCols.zip(dup.toSeq).map { case (k, x) => s"$k=$x" }.mkString(", ")}) — " +
+        "which row wins is ambiguous; dedup the CDC batch first"
+    })
     if (m.files.isEmpty) {
       val next = commit(spark, dir, src,
         partitionBy = m.partitionBy, tag = "merge-into-empty",
@@ -1318,25 +1357,13 @@ object LakeVersions {
     // scale valve: a matched table row's key necessarily lies inside
     // the source's key envelope, so bound the probe scan per int/long
     // key — the graftlake face turns the BETWEEN into manifest prune
-    val intLikeKeys = keyCols.filter(k => face.schema(k).dataType match {
-      case org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    })
-    val probe =
-      if (intLikeKeys.isEmpty) face
-      else {
-        val aggs = intLikeKeys.flatMap(k =>
-          Seq(min(k).as(s"lo_$k"), max(k).as(s"hi_$k")))
-        val env = src.agg(aggs.head, aggs.tail: _*).head()
-        intLikeKeys.zipWithIndex.foldLeft(face) { case (f, (k, i)) =>
-          // an all-null key column has a null envelope: no bound (the
-          // key can never match anyway; the semi-join returns nothing)
-          if (env.isNullAt(2 * i)) f
-          else f.filter(col(k) >= lit(env.get(2 * i)) &&
-            col(k) <= lit(env.get(2 * i + 1)))
-        }
-      }
+    val probe = intLikeKeys.zipWithIndex.foldLeft(face) { case (f, (k, i)) =>
+      // an all-null key column has a null envelope: no bound (the key
+      // can never match anyway; the semi-join returns nothing)
+      val lo = 3 + 2 * i
+      if (batch.isNullAt(lo)) f
+      else f.filter(col(k) >= lit(batch.get(lo)) && col(k) <= lit(batch.get(lo + 1)))
+    }
     val hitRels = hitRelpaths(spark, dir, m, "mergeInto",
       probe.withColumn(HitFileCol, input_file_name())
         .join(src.select(keyCols.map(col): _*), keyCols, "left_semi"))

@@ -1261,4 +1261,93 @@ class LakeVersionsSpec extends AnyFunSuite with SparkFixture {
     }
     assert(e.getMessage.contains("re-bootstrap"))
   }
+
+  test("every Spark job a lake op starts touches data: append and compaction " +
+      "1, delete and update 2, merge at most 8") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = lake()
+    LakeVersions.commit(s, dir,
+      (0 until 20).map(k => (k.toLong, s"old$k")).toDF("k", "t").coalesce(1),
+      statsCols = Seq("k")): Unit
+    val jobs = Seq(
+      "deleteWhere" -> TestSpark.jobsStartedBy(
+        LakeVersions.deleteWhere(s, dir, col("k") === 3L)),
+      "updateWhere" -> TestSpark.jobsStartedBy(
+        LakeVersions.updateWhere(s, dir, col("k") === 4L,
+          Map("t" -> lit("upd")))),
+      "mergeInto" -> TestSpark.jobsStartedBy(
+        LakeVersions.mergeInto(s, dir,
+          Seq((5L, "new5"), (99L, "new99")).toDF("k", "t"), Seq("k"))),
+      "commit" -> TestSpark.jobsStartedBy(
+        LakeVersions.commit(s, dir,
+          Seq((100L, "app")).toDF("k", "t").coalesce(1),
+          statsCols = Seq("k"))),
+      "compactCommit" -> TestSpark.jobsStartedBy(
+        LakeVersions.compactCommit(s, dir))).toMap
+    info(s"jobs per op: ${jobs.toSeq.sorted.mkString(", ")}")
+    assert(LakeVersions.latestVersion(s, dir) == 6L, "every op must commit")
+    assert(Seq("commit", "compactCommit").map(jobs) == Seq(1, 1), jobs)
+    assert(Seq("deleteWhere", "updateWhere").map(jobs) == Seq(2, 2), jobs)
+    assert(jobs("mergeInto") <= 8, jobs)
+    // the stats the jobless footer reads recorded are the real envelopes
+    val entries = LakeVersions.pinned(s, dir, None).files
+    assert(entries.size == 1 && entries.head.rows == 21L)
+    assert(entries.head.stats("k") == ((0L, 100L)))
+    val got = LakeVersions.read(s, dir).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got.size == 21 && !got.contains(3L))
+    assert(got(4L) == "upd" && got(5L) == "new5" && got(99L) == "new99")
+  }
+
+  test("mergeInto's one-aggregate batch checks: a repeated key tuple refuses " +
+      "by name, null-holding tuples insert, string and all-null int keys merge") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val dir = lake()
+    LakeVersions.commit(s, dir,
+      Seq((1, "a", "old1a"), (1, "b", "old1b"), (2, "a", "old2a"))
+        .toDF("k", "s", "t").coalesce(1), statsCols = Seq("k")): Unit
+    // a two-column key repeats one tuple: refused, and the message
+    // names that tuple (not the tuple sharing only its first column)
+    val dupE = intercept[IllegalArgumentException] {
+      LakeVersions.mergeInto(s, dir,
+        Seq((1, "a", "x"), (1, "b", "y"), (1, "a", "z")).toDF("k", "s", "t"),
+        Seq("k", "s"))
+    }
+    assert(dupE.getMessage.contains("duplicate keys (e.g. k=1, s=a)"),
+      dupE.getMessage)
+    assert(LakeVersions.latestVersion(s, dir) == 1L)
+    // repeated tuples that each hold a null can never match: all insert
+    val withNulls = Seq[(Option[Int], Option[String], String)](
+      (Some(1), None, "n1"), (Some(1), None, "n2"),
+      (None, Some("a"), "n3"), (None, Some("a"), "n4"))
+    val (v2, rw2, _) = LakeVersions.mergeInto(s, dir,
+      withNulls.toDF("k", "s", "t"), Seq("k", "s"))
+    assert(v2 == 2L && rw2 == 0)
+    assert(LakeVersions.read(s, dir).count() == 7L)
+    // an int key column that is all null: no envelope bound, and the
+    // rows insert without replacing anything
+    val (v3, rw3, _) = LakeVersions.mergeInto(s, dir,
+      Seq[(Option[Int], String, String)]((None, "a", "n5"), (None, "b", "n6"))
+        .toDF("k", "s", "t"), Seq("k"))
+    assert(v3 == 3L && rw3 == 0)
+    val afterNull = LakeVersions.read(s, dir)
+    assert(afterNull.count() == 9L)
+    assert(afterNull.filter(col("k").isNull).count() == 4L)
+    assert(afterNull.filter(col("t").startsWith("old")).count() == 3L)
+    // a string key has no envelope: the probe scans the whole face,
+    // the matched key replaces and the new one inserts
+    val sdir = lake()
+    LakeVersions.commit(s, sdir,
+      Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("name", "n").coalesce(1)): Unit
+    val (sv, srw, scarry) = LakeVersions.mergeInto(s, sdir,
+      Seq(("b", 20L), ("d", 4L)).toDF("name", "n"), Seq("name"))
+    assert((sv, srw, scarry) == ((2L, 1, 0)))
+    val sgot = LakeVersions.read(s, sdir).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(sgot == Map("a" -> 1L, "b" -> 20L, "c" -> 3L, "d" -> 4L))
+  }
 }

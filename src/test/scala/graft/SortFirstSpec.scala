@@ -52,6 +52,14 @@ class SortFirstSpec extends AnyFunSuite {
     assert(rewritten == natural)
   }
 
+  test("widenScanSide: a streaming frame comes back unchanged, no job starts") {
+    val in = spark.readStream.format("rate").load().filter(col("value") > 0)
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = TestSpark.jobsStartedBy { out = SortFirst.widenScanSide(in) }
+    assert(out eq in, "a streaming frame must pass through unchanged")
+    assert(jobs == 0, s"$jobs jobs started at compose time")
+  }
+
   test("widen: multiset unchanged, no-op when already wide enough") {
     val widened = SortFirst.widen(docs)
     assert(widened.collect().toSet == docs.collect().toSet)
