@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: every SparkEntry query (reference-parity, LLM-pipeline
   * extensions, and the 8 ported reference benchmark shapes) on
   * SPARK_GRAFT_SF_DIR.
@@ -25,6 +23,11 @@ object Bench {
     * hashed-by-the-sf1-guard file; this alias keeps call sites local. */
   private[graft] def force(df: org.apache.spark.sql.DataFrame): Unit =
     BenchForce.force(df)
+
+  /** Generated classes Janino has compiled in this JVM so far (codegen
+    * cache misses; a hit compiles nothing). */
+  private def compileCount(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Per-query shuffle telemetry: bytes written to and read from the
     * shuffle during the timed runs, divided by `iters`. Shuffle volume
@@ -192,19 +195,12 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus.toInt, "graft-bench")
 
     val times = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val evictions = scala.collection.mutable.LinkedHashMap[String, Long]()
+    val compiles = scala.collection.mutable.LinkedHashMap[String, Long]()
     val shuffleMb = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     val evictionListener = new EvictionListener
     val shuffleListener = new ShuffleListener
@@ -245,6 +241,7 @@ object Bench {
         if (warmups > 0) force(fn(spark, sfDir)) // warm-up, untimed
         evictionListener.reset()
         shuffleListener.reset()
+        val compiled0 = compileCount()
         val samples = (1 to iters).map { _ =>
           // cold mode: drop plan-keyed memos BEFORE the clock starts, so
           // each timed run recomputes everything from the parquet inputs
@@ -256,6 +253,8 @@ object Bench {
         times(name) = samples(samples.size / 2)
         val ev = evictionListener.snapshot()
         if (ev > 0) evictions(name) = ev
+        val cc = compileCount() - compiled0
+        if (cc > 0) compiles(name) = cc
         val (sw, sr) = shuffleListener.snapshot()
         // per-execution average over the timed runs; queries that
         // shuffle nothing stay out of the JSON
@@ -380,6 +379,13 @@ object Bench {
     }
     val evJson = evictions.map { case (k, v) => s"${q(k)}:$v" }
       .mkString("{", ",", "}")
+    // per-query generated-class compiles over the timed runs: a warm run
+    // compiles nothing while the codegen cache holds the query's classes.
+    // A non-zero entry means the cap no longer covers the working set, or
+    // the plan changed after the warm-up (a memo such as
+    // Components.symCache first hits on the second run)
+    val ccJson = compiles.map { case (k, v) => s"${q(k)}:$v" }
+      .mkString("{", ",", "}")
     // per-query shuffle bytes (MB written/read per execution): the
     // plan-attribution companion to the wall times — a ratio that moved
     // with flat shuffle volume is host noise, one that moved with it is
@@ -407,6 +413,7 @@ object Bench {
       s""","canary":$canaryJson,"env_suspect":$envSuspect""" +
       s""","heap_max_mb":$heapMaxMb,"cpus":${q(cpus)}""" +
       s""","evicted_persisted_blocks":$evJson""" +
+      s""","codegen_compiles":$ccJson""" +
       s""","shuffle_mb":$shJson""" +
       s""","ratio_vs_reference":$ratios""" +
       s""","bench_vs_baseline":$benchVsBaseline""" +

@@ -102,7 +102,12 @@ object Components {
 
   private def symKey(
       pairs: DataFrame, aCol: String, bCol: String): (SymKey, DataFrame) = {
+    // A null id names no node: a pair with a null endpoint is no edge.
+    // Dropped here, before symmetrizing, so both faces agree — otherwise
+    // the lazy face labels a phantom null node the eager face's
+    // join-back to the previous round silently loses.
     val proj = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
     ((pairs.sparkSession, proj.queryExecution.analyzed.canonicalized,
       SourceSnapshot.of(pairs.inputFiles)), proj)
   }

@@ -40,6 +40,23 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
     assert(labelsOf(Components.connectedComponents(pairs)) == expected)
   }
 
+  test("null endpoints name no node: both faces return the same labels") {
+    val s = spark
+    import s.implicits._
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (Some(5L), Some(6L)))
+      .toDF("a_id", "b_id")
+    def labels(df: org.apache.spark.sql.DataFrame): Set[(Any, Any)] =
+      df.collect().map(r => (r.get(0), r.get(1))).toSet
+    val expected = Set[(Any, Any)]((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L))
+    assert(labels(Components.clusterLabels(pairs)) == expected)
+    assert(labels(Components.connectedComponents(pairs)) == expected)
+    val docs = Seq(1L, 2L, 3L, 5L, 6L).toDF("id")
+    assert(Components.dedupByCluster(docs, pairs, "id").as[Long].collect()
+      .toSet == Set(1L, 3L, 5L))
+    Components.clearSymCaches()
+  }
+
   test("random graph: lazy and eager faces both match union-find") {
     val s = spark
     import s.implicits._
