@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Avro compaction scale probe: what does zero-decode block copy buy
   * over the naive decode-rewrite on the many-small-files layout a
   * Kafka-connect sink leaves behind?
@@ -20,12 +18,7 @@ import org.apache.spark.sql.SparkSession
 object AvroCompactProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32, "graft-avro-compact-probe")
 
     val in = "/root/repo/target/tmp/avro_compact_probe_in"
     val outCopy = "/root/repo/target/tmp/avro_compact_probe_copy"

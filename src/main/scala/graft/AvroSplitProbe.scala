@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Avro read-path scale probe: measures what the round-15 read
@@ -23,12 +22,7 @@ import org.apache.spark.sql.functions._
 object AvroSplitProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32, "graft-avro-split-probe")
 
     val dir = "/root/repo/target/tmp/avro_split_probe"
     // ONE container file, hundreds of MB: lineitem replicated `rep`

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming Avro source scale probe: what does the micro-batch face
   * cost over the one-shot batch read, and how does admission control
   * shape a backlogged zone's drain?
@@ -28,12 +26,7 @@ import org.apache.spark.sql.SparkSession
 object AvroStreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32, "graft-avro-stream-probe")
     import org.apache.spark.sql.functions.col
 
     val zone = "/root/repo/target/tmp/avro_stream_probe_zone"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Distribution-drift scale probe: measures the PSI contingency +
@@ -14,12 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object DriftScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32, "graft-drift-scale-probe")
 
     val shuffleWritten = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

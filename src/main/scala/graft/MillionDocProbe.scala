@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, Dedup}
@@ -27,13 +26,9 @@ object MillionDocProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = if (args.length > 1) args(1).toInt else 200
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64") // 1M docs -> pair stages spill less with 2x parts
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32, "graft-million-doc-probe")
+    // 1M docs -> pair stages spill less with 2x parts
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
 
     val shuffleWritten = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

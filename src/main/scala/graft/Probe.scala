@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-query timing/plan probe for local iteration:
   * {{{ sbt "runMain graft.Probe <queryName> [sfDir] [explain] }}}
   * Warm-up + 3 timed runs (same discipline as [[Bench]]) on one query,
@@ -14,14 +12,7 @@ object Probe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val doExplain = args.contains("explain")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32, "graft-probe")
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
     if (doExplain) fn(spark, sfDir).explain("formatted")

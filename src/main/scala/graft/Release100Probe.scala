@@ -1,11 +1,11 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
-import graft.operators.{Dedup, Sampling}
+import graft.operators.{Dedup, PersistedPlans, Sampling}
 import graft.sources.PsIO
 
 /** ×100 end-to-end probe of the release-cut composition and the
@@ -34,16 +34,10 @@ object Release100Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val maxScale = if (args.length > 1) args(1).toInt else 100
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOTE: driver memory CANNOT be set here in local mode (the JVM
-      // heap is fixed at launch); size it via build.sbt's fork
-      // javaOptions / SBT_OPTS when running ×100
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // NOTE: driver memory CANNOT be set here in local mode (the JVM
+    // heap is fixed at launch); size it via build.sbt's fork
+    // javaOptions / SBT_OPTS when running ×100
+    val spark = Session.local(32, "graft-release100-probe")
 
     // task-level shuffle accounting for each measured block
     val shuffleWritten = new java.util.concurrent.atomic.AtomicLong
@@ -115,8 +109,7 @@ object Release100Probe {
         cut.write.mode("overwrite").parquet(outPath)
         spark.read.parquet(outPath).count()
       }
-      graft.operators.Components.clearSymCaches()
-      Sampling.clearBudgetCaches()
+      PersistedPlans.clear()
 
       out += "minhashLsh" -> measure("minhashLsh pairs") {
         Dedup.minhashLsh(c, "doc_id", "text").count()

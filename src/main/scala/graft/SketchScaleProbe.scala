@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sketch-state scale probe: builds KLL quantile sketches over ×10/×100
@@ -16,12 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object SketchScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32, "graft-sketch-scale-probe")
     import spark.implicits._
 
     for (n <- Seq(10000L, 100000L, 1000000L)) {

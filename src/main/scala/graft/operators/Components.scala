@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -64,87 +64,19 @@ object Components {
     * spills rather than evicts, and recompute-from-lineage remains the
     * correctness fallback if blocks are lost.
     *
-    * The persisted pair is MEMOIZED per (session, canonicalized edge
-    * plan): rebuilding the same clusterLabels query N times (a bench
-    * loop, a retried pipeline stage) reuses ONE pair of cache entries
-    * instead of registering 2N — block-manager storage is bounded by the
-    * number of DISTINCT pair relations, not by call count. Eager callers
-    * release their entry via [[releaseSym]] when done; lazy faces can
-    * call [[clearSymCaches]] between pipeline stages. */
-  private case class SymEntry(e: DataFrame, s: DataFrame) {
-    def unpersistAll(): Unit = {
-      s.unpersist(blocking = false)
-      e.unpersist(blocking = false)
-    }
-  }
-  private type SymKey =
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long)
-  /** Bounded (LRU, access-order) and keyed on the input-file
-    * snapshot alongside the canonicalized plan — the same two fixes
-    * [[Sampling.selectByBudget]]'s ranked cache got: a source-directory
-    * OVERWRITE emits fresh part-file names, so the rebuilt pair plan
-    * misses the cache instead of silently serving the old corpus' edges
-    * (file-source plans canonicalize by root path, which would
-    * otherwise collide), and evicted entries are unpersisted so
-    * long-lived sessions can't accrete pair-relation persists forever.
-    * Plans already handed out stay correct after eviction — lineage
-    * recomputes; they just lose the shared cache. */
-  private val MaxSymEntries = 8
-  private val symCache =
-    new java.util.LinkedHashMap[SymKey, SymEntry](16, 0.75f, true) {
-      override def removeEldestEntry(
-          entry: java.util.Map.Entry[SymKey, SymEntry]): Boolean = {
-        val evict = size() > MaxSymEntries
-        if (evict) entry.getValue.unpersistAll()
-        evict
-      }
-    }
-
-  private def symKey(
-      pairs: DataFrame, aCol: String, bCol: String): (SymKey, DataFrame) = {
+    * The persisted pair is memoized in [[PersistedPlans]] per input
+    * plan, so rebuilding the same clusterLabels query reuses ONE pair of
+    * cache entries. Eager callers release their entry when done; lazy
+    * faces can call [[PersistedPlans.clear]] between pipeline stages. */
+  private def sym(pairs: DataFrame, aCol: String, bCol: String)
+      : (PersistedPlans.Key, DataFrame) = {
     // A null id names no node: a pair with a null endpoint is no edge.
     // Dropped here, before symmetrizing, so both faces agree — otherwise
     // the lazy face labels a phantom null node the eager face's
     // join-back to the previous round silently loses.
     val proj = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-    ((pairs.sparkSession, proj.queryExecution.analyzed.canonicalized,
-      SourceSnapshot.of(pairs.inputFiles)), proj)
-  }
-
-  private def sym(
-      pairs: DataFrame, aCol: String, bCol: String): (SymKey, SymEntry) = {
-    val (key, proj) = symKey(pairs, aCol, bCol)
-    symCache.synchronized {
-      val hit = symCache.get(key)
-      if (hit != null) {
-        // Re-validate before serving: an EXTERNAL
-        // `spark.catalog.clearCache()` (bench hygiene, operational
-        // memory pressure) strips the persist out from under the entry
-        // without touching this map. Serving the entry anyway is
-        // silently catastrophic at scale — every downstream action
-        // recomputes the upstream pair plan ~4·(rounds+1) times, the
-        // exact blowup this cache exists to prevent. `storageLevel`
-        // asks Spark's CacheManager, so it sees the eviction; persist
-        // on a now-uncached Dataset simply re-registers the plan.
-        if (hit.e.storageLevel == StorageLevel.NONE)
-          hit.e.persist(StorageLevel.MEMORY_AND_DISK)
-        if (hit.s.storageLevel == StorageLevel.NONE)
-          hit.s.persist(StorageLevel.MEMORY_AND_DISK)
-        return (key, hit)
-      }
-      // A same-plan entry under a DIFFERENT file snapshot means the
-      // source directory was rewritten. Missing our key is not enough:
-      // the stale entry's persisted InMemoryRelation is registered in
-      // Spark's CacheManager under the SAME canonical plan (file
-      // indexes compare by root path), so the fresh persist below
-      // would be a no-op and every new action would silently execute
-      // the OLD corpus' cached blocks. Unpersist the collider FIRST —
-      // uncacheQuery deregisters the plan synchronously (the
-      // ComponentsSpec external-overwrite test fails without this).
-      val stale = symCache.keySet().toArray(Array.empty[SymKey])
-        .filter(k => k._1 == key._1 && k._2 == key._2 && k._3 != key._3)
-      stale.foreach(k => Option(symCache.remove(k)).foreach(_.unpersistAll()))
+    val (key, Seq(_, s)) = PersistedPlans(proj) {
       val e = proj.persist(StorageLevel.MEMORY_AND_DISK)
       // Self-loops are emitted per ENDPOINT (duplicates and all) instead
       // of via a distinct() over the node set: every consumer of the
@@ -170,27 +102,9 @@ object Components {
         .union(e.select(col("dst").as("src"), col("dst").as("dst")))
         .repartition(p, col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val entry = SymEntry(e, s)
-      symCache.put(key, entry)
-      (key, entry)
+      Seq(e, s)
     }
-  }
-
-  /** Unpersist and forget one memoized edge cache (no-op if absent). */
-  private def releaseSym(key: SymKey): Unit = symCache.synchronized {
-    Option(symCache.remove(key)).foreach(_.unpersistAll())
-  }
-
-  /** Release every memoized edge cache — call between pipeline stages
-    * when the lazy [[clusterLabels]] plans built so far are no longer
-    * needed (to return memory promptly; correctness no longer depends
-    * on it — the key's input-file snapshot misses after an overwrite,
-    * and the LRU bound unpersists cold entries on its own). Plans
-    * already handed out stay CORRECT afterwards (lineage recomputes);
-    * they just lose the shared cache. */
-  def clearSymCaches(): Unit = symCache.synchronized {
-    symCache.values().forEach(_.unpersistAll())
-    symCache.clear()
+    (key, s)
   }
 
   /** One min-label round: every node takes min over its in-edges'
@@ -233,8 +147,8 @@ object Components {
     // completion hook — but they are memoized per input plan, so
     // repeated builds of the same query share ONE pair of entries;
     // footprint is bounded by the (small) pair relation per DISTINCT
-    // input. clearSymCaches() releases them between pipeline stages.
-    val (_, SymEntry(_, s)) = sym(pairs, aCol, bCol)
+    // input. PersistedPlans.clear() releases them between pipeline stages.
+    val (_, s) = sym(pairs, aCol, bCol)
     (2 to rounds).foldLeft(round1(s))((labels, _) => step(s, labels))
   }
 
@@ -279,7 +193,7 @@ object Components {
       aCol: String = "a_id",
       bCol: String = "b_id",
       maxRounds: Int = 50): DataFrame = {
-    val (symK, SymEntry(_, s)) = sym(pairs, aCol, bCol) // cached; reused every round
+    val (symK, s) = sym(pairs, aCol, bCol) // cached; reused every round
     // Seed with the collapsed round 1 (see [[round1]]): one aggregation
     // replaces the old identity-label init (a distinct over the node
     // set) PLUS the first join round. `round` starts at 1 so maxRounds
@@ -299,7 +213,7 @@ object Components {
     val converged = changed == 0
     // release (not just unpersist): removing the memo entry lets the next
     // caller re-register a fresh cache instead of reusing an unpersisted one
-    releaseSym(symK)
+    PersistedPlans.release(symK)
     if (!converged) freeCheckpoint(labels) // don't leak the last round on failure
     require(converged,
       s"connectedComponents did not converge in $maxRounds rounds")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deterministic sampling / splitting for training-data pipelines.
   *
@@ -234,27 +235,14 @@ object Sampling {
       if (partitions > 0) partitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val order = Seq(col(scoreCol).desc, col(idCol).asc)
-    // memoized persist, Components.symCache-style: repeated builds over
-    // the same (input plan, ordering, p) — bench iterations, the
-    // differential sweep, a pipeline composing this query twice — share
-    // ONE corpus-sized cache entry instead of registering a fresh one
-    // per invocation; clearBudgetCaches() releases them between stages
-    val ranked = {
-      val base = df.repartitionByRange(p, order: _*)
-        .withColumn("__pid", spark_partition_id())
-      // The key carries a source SNAPSHOT alongside the canonicalized
-      // plan: file-source plans compare by root path, so a plan-only key
-      // would keep serving a prior corpus' cached blocks after the
-      // directory is overwritten. Spark writers emit fresh random part
-      // names on every write, so the input-file snapshot pins the
-      // generation (an in-place rewrite of the SAME file name — which no
-      // Spark writer does — is the one shape it can't see; mtime probes
-      // per file would cost a listing-sized RPC storm at 100 TB).
-      val key = (df.sparkSession,
-        base.queryExecution.analyzed.canonicalized,
-        SourceSnapshot.of(df.inputFiles))
-      cacheLookup(key, base)
-    }
+    // memoized persist (PersistedPlans): repeated builds over the same
+    // (input plan, ordering, p) — bench iterations, the differential
+    // sweep, a pipeline composing this query twice — share ONE
+    // corpus-sized cache entry instead of registering one per invocation
+    val base = df.repartitionByRange(p, order: _*)
+      .withColumn("__pid", spark_partition_id())
+    val (_, Seq(ranked)) =
+      PersistedPlans(base)(Seq(base.persist(StorageLevel.MEMORY_AND_DISK)))
     val wOff = Window.orderBy("__pid")
       .rowsBetween(Window.unboundedPreceding, -1)
     val offDf = broadcast(
@@ -275,69 +263,6 @@ object Sampling {
         col("__off") + sum(col(tokensCol).cast("long")).over(w))
       .filter(col("cum_tokens") <= budget)
       .drop("__pid", "__off")
-  }
-
-  private type RankedKey =
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Long)
-  /** Bounded (LRU, access-order) so a long-lived session that builds
-    * many distinct selections can't accrete corpus-sized persists
-    * forever: the evicted entry is unpersisted (plans already handed out
-    * stay correct — lineage recomputes, they just lose the shared
-    * cache). 8 entries covers every in-repo composition (bench
-    * iterations, the differential sweep, pipelines using 1-2 rankings). */
-  private val MaxRankedEntries = 8
-  private val rankedCache =
-    new java.util.LinkedHashMap[RankedKey, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[RankedKey, DataFrame]): Boolean = {
-        val evict = size() > MaxRankedEntries
-        if (evict) e.getValue.unpersist(blocking = false)
-        evict
-      }
-    }
-  private def cacheLookup(key: RankedKey, base: DataFrame): DataFrame =
-    rankedCache.synchronized {
-      val hit = rankedCache.get(key)
-      if (hit != null) {
-        // Re-validate before serving: an external
-        // `spark.catalog.clearCache()` strips the persist without
-        // touching this map; serving the entry anyway silently
-        // recomputes the corpus-sized range-partition once per action.
-        // `storageLevel` asks Spark's CacheManager (sees the eviction);
-        // persist on a now-uncached Dataset just re-registers the plan.
-        if (hit.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          hit.persist()
-        hit
-      } else {
-        // evict any same-plan entry under a different file snapshot
-        // BEFORE persisting: its InMemoryRelation is registered in
-        // Spark's CacheManager under the same canonical plan (file
-        // indexes compare by root path), so without the uncache the
-        // fresh persist is a no-op and actions silently execute the
-        // overwritten corpus' cached blocks
-        val stale = rankedCache.keySet().toArray(Array.empty[RankedKey])
-          .filter(k => k._1 == key._1 && k._2 == key._2 && k._3 != key._3)
-        stale.foreach(k =>
-          Option(rankedCache.remove(k)).foreach(_.unpersist(blocking = false)))
-        val v = base.persist()
-        rankedCache.put(key, v)
-        v
-      }
-    }
-
-  /** Release every memoized budget-ranking cache (plans already handed
-    * out stay correct — lineage recomputes; they lose the shared cache).
-    * Call between pipeline stages to return executor memory promptly;
-    * correctness no longer depends on it — the cache key carries the
-    * input-file snapshot (a directory overwrite emits fresh part
-    * names, so it misses and builds anew), and the LRU bound unpersists
-    * cold entries on its own. The differential sweep still clears these
-    * before every config run. */
-  def clearBudgetCaches(): Unit = rankedCache.synchronized {
-    rankedCache.values().forEach(_.unpersist(blocking = false))
-    rankedCache.clear()
   }
 
   /** Per-group token budgets — the token-aware form of corpus mixing

@@ -27,7 +27,7 @@ case class MinHashSignature(
   // case-class equality over Array fields is REFERENCE equality, so two
   // builds of the same MinHash plan would never compare equal — which
   // broke every canonicalized-plan memo keyed on an LSH subtree
-  // (Components.symCache re-persisted and re-ran the whole LSH pipeline
+  // (Components re-persisted its edges and re-ran the whole LSH pipeline
   // on every rebuild) and Spark's own CacheManager/ReuseExchange
   // matching through this expression.
   require(coefA.length == coefB.length && coefA.nonEmpty)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Components
+import graft.operators.PersistedPlans
 
 /** Warm actions run on cached generated classes: [[Session.local]] sizes
   * Spark's JVM-wide codegen class cache to hold the working set of the
@@ -32,6 +32,6 @@ class CodegenCacheSpec extends AnyFunSuite with SparkFixture {
       rotation()
       val warm = rotation()
       assert(warm.forall(_._2 == 0), s"warm actions recompiled: $warm")
-    } finally Components.clearSymCaches()
+    } finally PersistedPlans.clear()
   }
 }

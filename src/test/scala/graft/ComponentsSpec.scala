@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Components, Dedup}
+import graft.operators.{Components, Dedup, PersistedPlans, Sampling}
 
 class ComponentsSpec extends AnyFunSuite with SparkFixture {
 
@@ -54,7 +54,7 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
     val docs = Seq(1L, 2L, 3L, 5L, 6L).toDF("id")
     assert(Components.dedupByCluster(docs, pairs, "id").as[Long].collect()
       .toSet == Set(1L, 3L, 5L))
-    Components.clearSymCaches()
+    PersistedPlans.clear()
   }
 
   test("random graph: lazy and eager faces both match union-find") {
@@ -104,7 +104,7 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
   test("sym cache is memoized per input plan and releasable") {
     val s = spark
     import s.implicits._
-    Components.clearSymCaches()
+    PersistedPlans.clear()
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("a_id", "b_id")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // N rebuilds of the same lazy query must register ONE pair of cache
@@ -121,21 +121,52 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
       .count() == 2)
     val added2 = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added2.size > added.size)
-    // explicit release drops every memoized entry's blocks
-    Components.clearSymCaches()
+    // a budget ranking lives in the same memo
+    val docs = (1L to 50L).map(i => (i, 1, 10L)).toDF("id", "score", "toks")
+    assert(Sampling.selectByBudget(docs, "score", "id", "toks", 100L, 3)
+      .count() == 10)
+    val added3 = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added3.size > added2.size)
+    // one explicit release drops every memoized entry's blocks
+    PersistedPlans.clear()
     val after = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(after.isEmpty,
-      s"clearSymCaches left ${after.size} persistent RDDs registered")
+      s"PersistedPlans.clear left ${after.size} persistent RDDs registered")
     // released plans remain correct (lineage recompute)
     assert(labelsOf(Components.clusterLabels(pairs)) ==
       unionFind(Seq((1L, 2L), (2L, 3L))))
-    Components.clearSymCaches()
+    PersistedPlans.clear()
+  }
+
+  test("persisted plans: one LRU of 8 entries, shared by both operators") {
+    val s = spark
+    import s.implicits._
+    PersistedPlans.clear()
+    def registered = spark.sparkContext.getPersistentRDDs.keySet
+    // 8 distinct edge relations fill the memo, oldest first
+    val edgeRdds = (1L to 8L).map { i =>
+      val before = registered
+      assert(Components.clusterLabels(Seq((i, 100L + i)).toDF("a_id", "b_id"))
+        .count() == 2)
+      registered -- before
+    }
+    assert(edgeRdds.forall(_.nonEmpty))
+    // a ninth entry, from the other operator, evicts the oldest edge entry
+    val docs = (1L to 50L).map(i => (i, 1, 10L)).toDF("id", "score", "toks")
+    assert(Sampling.selectByBudget(docs, "score", "id", "toks", 100L, 3)
+      .count() == 10)
+    val live = registered
+    assert(edgeRdds.head.intersect(live).isEmpty,
+      "the least recently used edge entry is still persisted")
+    assert(edgeRdds.tail.forall(_.subsetOf(live)),
+      "a more recently used edge entry was unpersisted")
+    PersistedPlans.clear()
   }
 
   test("sym cache survives an external clearCache: hit path re-persists") {
     val s = spark
     import s.implicits._
-    Components.clearSymCaches()
+    PersistedPlans.clear()
     def pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a_id", "b_id")
     assert(Components.clusterLabels(pairs).count() == 5)
     // an EXTERNAL clearCache (bench hygiene, ops memory pressure) strips
@@ -152,7 +183,7 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
       "post-clearCache hit served an unpersisted sym cache entry")
     assert(labelsOf(labels) ==
       unionFind(Seq((1L, 2L), (2L, 3L), (5L, 6L))))
-    Components.clearSymCaches()
+    PersistedPlans.clear()
   }
 
   test("dedupByCluster keeps exactly the min-id member of each cluster") {
@@ -200,7 +231,7 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
       .write.mode("overwrite").parquet(dir)
     assert(components() == 3,
       "cluster labels after overwrite must reflect the new pair relation")
-    Components.clearSymCaches()
+    PersistedPlans.clear()
   }
 
   test("edge cache: an EXTERNAL (out-of-session) overwrite is not served stale") {
@@ -233,6 +264,37 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
     Files.move(Paths.get(stage), Paths.get(dir))
     assert(components() == 3,
       "labels after an out-of-session rewrite must reflect the new relation")
-    Components.clearSymCaches()
+    PersistedPlans.clear()
+  }
+
+  test("edge cache: an external overwrite after memo hits is not served stale") {
+    val s = spark
+    import s.implicits._
+    import java.nio.file.{Files, Path, Paths}
+    PersistedPlans.clear()
+    val root = Files.createTempDirectory("graft-cc-hits")
+    val dir = root.resolve("pairs").toString
+    Seq((1L, 2L), (2L, 3L)).toDF("a_id", "b_id").write.parquet(dir)
+    def components() =
+      labelsOf(Components.clusterLabels(s.read.parquet(dir)).select("node", "label"))
+        .values.toSet.size
+    // Built, then hit twice: the edge plan is now persisted, so the
+    // optimized plan of every rebuild reads the InMemoryRelation, not
+    // the files. A snapshot taken there (`Dataset.inputFiles`) sees no
+    // files before or after the rewrite and serves the old edges.
+    (1 to 3).foreach(_ => assert(components() == 1))
+    val stage = root.resolve("stage").toString
+    Seq((10L, 11L), (20L, 21L), (30L, 31L)).toDF("a_id", "b_id")
+      .write.parquet(stage)
+    def rmTree(p: Path): Unit = {
+      if (Files.isDirectory(p))
+        Files.list(p).forEach(c => rmTree(c))
+      Files.delete(p)
+    }
+    rmTree(Paths.get(dir))
+    Files.move(Paths.get(stage), Paths.get(dir))
+    assert(components() == 3,
+      "labels after an out-of-session rewrite must reflect the new relation")
+    PersistedPlans.clear()
   }
 }

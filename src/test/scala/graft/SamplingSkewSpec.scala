@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Sampling, Skew}
+import graft.operators.{PersistedPlans, Sampling, Skew}
 
 class SamplingSkewSpec extends AnyFunSuite with SparkFixture {
 
@@ -131,7 +131,7 @@ class SamplingSkewSpec extends AnyFunSuite with SparkFixture {
     }
     // each random corpus memoized one ranking persist; release them
     // (also exercises the release path — results must stay correct after)
-    Sampling.clearBudgetCaches()
+    PersistedPlans.clear()
     val docs = (1L to 50L).map(i => (i, 1, 10L)).toDF("id", "score", "toks")
     assert(Sampling.selectByBudget(docs, "score", "id", "toks", 100L, 3).count() == 10)
   }
@@ -151,13 +151,13 @@ class SamplingSkewSpec extends AnyFunSuite with SparkFixture {
     (1L to 100L).map(i => (i, 100, 50L)).toDF("id", "score", "toks")
       .write.mode("overwrite").parquet(dir)
     assert(run() == 4L, "selection after overwrite must reflect the new corpus")
-    Sampling.clearBudgetCaches()
+    PersistedPlans.clear()
   }
 
   test("selectByBudget cache survives an external clearCache: hit re-persists") {
     val s = spark
     import s.implicits._
-    Sampling.clearBudgetCaches()
+    PersistedPlans.clear()
     val docs = (1L to 100L).map(i => (i, 100, 10L)).toDF("id", "score", "toks")
     def run() = Sampling.selectByBudget(docs, "score", "id", "toks", 200L, 3).count()
     assert(run() == 20L)
@@ -169,7 +169,7 @@ class SamplingSkewSpec extends AnyFunSuite with SparkFixture {
     assert(run() == 20L)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
       "post-clearCache hit served an unpersisted ranked cache entry")
-    Sampling.clearBudgetCaches()
+    PersistedPlans.clear()
   }
 
   test("leakageSafeSplit: a near-dup cluster lands whole in one split") {

@@ -15,9 +15,10 @@ import graft.operators.{Components, Dedup, SortFirst}
   *    carries hash coefficients, and if those ever regress to a
   *    reference-equality type (Array), two builds of the same LSH plan
   *    stop canonicalizing equal — which silently defeats
-  *    Components.symCache and every CacheManager/exchange-reuse match
-  *    through the expression (each execution then re-runs the whole
-  *    LSH pipeline; the round-19 profile caught exactly that).
+  *    [[graft.operators.PersistedPlans]] and every CacheManager/
+  *    exchange-reuse match through the expression (each execution then
+  *    re-runs the whole LSH pipeline; the round-19 profile caught
+  *    exactly that).
   */
 class SortFirstSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -77,7 +78,7 @@ class SortFirstSpec extends AnyFunSuite {
       "two builds of the same MinHash-LSH plan must canonicalize equal — " +
         "a mismatch means an expression param regressed to reference " +
         "equality (e.g. Array coefficients) and plan-keyed memoization " +
-        "(Components.symCache, CacheManager) is silently defeated")
+        "(PersistedPlans, CacheManager) is silently defeated")
   }
 
   test("clusterLabels matches brute-force components on a multi-shape graph") {
