@@ -228,10 +228,9 @@ object Bench {
       if (canaryEnabled) retimeInFreshJvm(canaryName, sfDir) else None
     // SPARK_GRAFT_BENCH_COLD=1: COLD first-execution mode for the cache-
     // honesty audit (r19 verdict item 3) — no untimed warm-up, and every
-    // plan-keyed memo (PersistedPlans: Components' edges, Sampling's
-    // rankings) is dropped before each timed run, so the timed region
-    // provably contains the full pipeline (the LSH edge build included)
-    // instead of a warm persisted relation. Off by default; the default
+    // plan-keyed memo (PersistedPlans: Sampling's budget rankings) is
+    // dropped before each timed run, so the timed region provably
+    // contains the full pipeline instead of a warm persisted relation. Off by default; the default
     // behavior (warmup=1) is unchanged.
     val cold = sys.env.get("SPARK_GRAFT_BENCH_COLD").contains("1")
     val warmups = if (cold) 0 else 1
@@ -383,8 +382,8 @@ object Bench {
     // per-query generated-class compiles over the timed runs: a warm run
     // compiles nothing while the codegen cache holds the query's classes.
     // A non-zero entry means the cap no longer covers the working set, or
-    // the plan changed after the warm-up (a memo such as
-    // PersistedPlans first hits on the second run)
+    // the plan changed after the warm-up (PersistedPlans' budget
+    // ranking first hits on the second run)
     val ccJson = compiles.map { case (k, v) => s"${q(k)}:$v" }
       .mkString("{", ",", "}")
     // per-query shuffle bytes (MB written/read per execution): the

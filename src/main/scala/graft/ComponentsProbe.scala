@@ -6,10 +6,9 @@ import graft.operators.{Components, Dedup}
 
 /** Connected-components scale probe (SCALEPROBE.md round-7 section):
   * (1) the real path — minhash pairs on the ×`dup` duplicated corpus →
-  * cluster labels, lazy vs eager face, pair co-labeling checked; (2) a
-  * synthetic random graph at ×1 / ×10 edge count to show per-round cost
-  * scales with E and the eager face's convergence round count stays at
-  * the component diameter, not |V|.
+  * cluster labels, pair co-labeling checked; (2) a synthetic random
+  * graph at ×1 / ×10 edge count to show per-round cost scales with E and
+  * the convergence round count stays at the component diameter, not |V|.
   *
   * {{{ sbt "runMain graft.ComponentsProbe [sfDir] [dup]" }}}
   */
@@ -36,24 +35,17 @@ object ComponentsProbe {
     val pairs = Dedup.minhashLsh(docs, "doc_id", "text").cache()
     println(s"[cprobe] minhash pairs: ${pairs.count()}")
 
-    val lazyLabels = time("clusterLabels lazy r=6") {
-      val l = Components.clusterLabels(pairs).cache(); l.count(); l
+    val labels = time("clusterLabels") {
+      Components.clusterLabels(pairs).localCheckpoint()
     }
-    val eagerLabels = time("connectedComponents eager") {
-      Components.connectedComponents(pairs)
-    }
-    val nClusters = lazyLabels.select("label").distinct().count()
-    val agree = lazyLabels.withColumnRenamed("label", "l1")
-      .join(eagerLabels.withColumnRenamed("label", "l2"), "node")
-      .filter(col("l1") =!= col("l2")).count()
+    val nClusters = labels.select("label").distinct().count()
     // every pair co-labeled = the dedup-correctness property
     val split = pairs.select(col("a_id").as("node"), col("b_id"))
-      .join(lazyLabels, "node").withColumnRenamed("label", "la")
+      .join(labels, "node").withColumnRenamed("label", "la")
       .select(col("b_id").as("node"), col("la"))
-      .join(lazyLabels, "node")
+      .join(labels, "node")
       .filter(col("la") =!= col("label")).count()
-    println(s"[cprobe] clusters=$nClusters lazy-vs-eager disagreements=$agree " +
-      s"split pairs=$split")
+    println(s"[cprobe] clusters=$nClusters split pairs=$split")
 
     // ---- synthetic graph: per-round cost vs edge count -----------------
     // E random edges over V nodes (E = 2V): supercritical regime — one
@@ -67,9 +59,8 @@ object ComponentsProbe {
     for (v <- Seq(100000L, 1000000L)) {
       val g = randomGraph(v)
       println(s"[cprobe] synthetic graph: V=$v E=${g.count()}")
-      time(s"eager components V=$v") {
-        val labels = Components.connectedComponents(g)
-        val comps = labels.select("label").distinct().count()
+      time(s"components V=$v") {
+        val comps = Components.clusterLabels(g).select("label").distinct().count()
         println(s"[cprobe]   components=$comps")
       }
     }

@@ -109,11 +109,11 @@ object DiffConfig {
       val fn = SparkEntry.queries(name)
       // the query closure is re-invoked per config so ANALYSIS AND
       // PLANNING happen under the altered conf, not just execution —
-      // and the engine's memoized persists (PersistedPlans: Components'
-      // symmetrized edges, Sampling's budget ranking) are dropped first,
-      // or the alternate config would silently replay base-config cached
-      // blocks for those stages and the differential would be vacuous
-      // exactly where partition/scan-shape bugs hide
+      // and the engine's memoized persists (PersistedPlans: Sampling's
+      // budget ranking) are dropped first, or the alternate config would
+      // silently replay base-config cached blocks for those stages and
+      // the differential would be vacuous exactly where
+      // partition/scan-shape bugs hide
       def run(): String = {
         graft.operators.PersistedPlans.clear()
         canonicalHash(fn(spark, sfDir))

@@ -395,14 +395,10 @@ object ExtQueries {
     // exactly one of {A,B,C}); oracle recomputes components with a
     // recursive CTE over the brute-force pair set, which the LSH pairs
     // match exactly at this similarity (see q_minhash_lsh)
-    // rounds=4: LSH dup groups at 0.8 similarity are near-cliques
-    // (diameter <= 2 at both test SFs), so 4 rounds is 2x margin —
-    // and the oracle computes the TRUE fixpoint, so any
-    // under-propagation is a hash mismatch, not a silent wrong answer
     "q_dedup_clusters" -> ((s, dir) => {
       val d = t(s, dir, "documents")
       val pairs = Dedup.minhashLsh(d.df, "doc_id", "text")
-      Components.clusterLabels(pairs, rounds = 4)
+      Components.clusterLabels(pairs)
         .select(col("node").as("doc_id"), col("label").as("cluster_id"))
         .orderBy("doc_id")
     }),
@@ -412,7 +408,7 @@ object ExtQueries {
     "q_cluster_dedup" -> ((s, dir) => {
       val d = t(s, dir, "documents")
       val pairs = Dedup.minhashLsh(d.df, "doc_id", "text")
-      Components.dedupByCluster(d.df, pairs, "doc_id", rounds = 4)
+      Components.dedupByCluster(d.df, pairs, "doc_id")
         .select("doc_id", "lang").orderBy("doc_id")
     }),
 
@@ -1346,7 +1342,7 @@ object ExtQueries {
       val feats = Multimodal.extractFeatures(corpus).toDF()
       val clean = feats.filter(col("decoded"))
       val pairs = Multimodal.imageNearDupPairs(media, maxHamming = 4)
-      Components.dedupByCluster(clean.select("id"), pairs, "id", rounds = 2)
+      Components.dedupByCluster(clean.select("id"), pairs, "id")
         .join(feats.select(col("id"),
           col("width").cast("long").as("width"),
           col("height").cast("long").as("height"),
@@ -1519,7 +1515,7 @@ object ExtQueries {
       // input is a parquet scan — the fixture must cost like one.
       val media = persistOnce(s, "img", dir, imageNearDupMedia(s, dir))
       val pairs = Multimodal.imageNearDupPairs(media, maxHamming = 4)
-      Components.dedupByCluster(media.toDF().select("id"), pairs, "id", rounds = 2)
+      Components.dedupByCluster(media.toDF().select("id"), pairs, "id")
         .orderBy("id")
     }),
 
@@ -3921,8 +3917,8 @@ object ExtQueries {
 
   /** Recursive-CTE connected components over the brute-force near-dup
     * pair set: `walk` carries every (node, reachable-label) pair; min per
-    * node = the component's min id — the same fixpoint
-    * [[Components.clusterLabels]] converges to. */
+    * node = the component's min id — the fixpoint
+    * [[Components.clusterLabels]] iterates to, at any diameter. */
   private def componentCte(threshold: Double): String =
     docShingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") +
     s""", e AS (SELECT a_id, b_id FROM p

@@ -9,7 +9,7 @@ import graft.operators.{Components, Dedup}
   * small bases and report exponents; a capacity planner also needs one
   * committed run at a large ABSOLUTE size with the raw numbers — wall,
   * shuffle bytes, candidate volumes — for the full near-dup pipeline:
-  * minhashLsh → connectedComponents → decontaminate.
+  * minhashLsh → clusterLabels → decontaminate.
   *
   * Corpus: 1M documents (sf0.1's 5k docs ×200 under fresh doc_ids,
   * every copy's tokens suffixed `_i` — the honest recipe from the ×100
@@ -93,9 +93,8 @@ object MillionDocProbe {
     val pairs = spark.read.parquet(pairsPath)
 
     // duplicate clusters over the verified pairs
-    measure("connectedComponents") {
-      val labels = Components.connectedComponents(pairs)
-      labels.select("label").distinct().count()
+    measure("clusterLabels") {
+      Components.clusterLabels(pairs).select("label").distinct().count()
     }
 
     // cross-corpus decontamination: hash-split 80/20 (the ×100 probe's

@@ -8,12 +8,12 @@ import org.apache.spark.sql.execution.FileRelation
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.storage.StorageLevel
 
-/** The one memo of persisted frames an operator builds from a plan —
-  * [[Components]]' symmetrized edges, [[Sampling.selectByBudget]]'s
-  * range-partitioned ranking. Rebuilding the same query N times (a bench
-  * loop, the differential sweep, a retried pipeline stage) reuses ONE
-  * set of cache entries instead of registering N: block-manager storage
-  * is bounded by the number of DISTINCT input plans, not by call count.
+/** The memo of persisted frames an operator builds from a plan. Its one
+  * user is [[Sampling.selectByBudget]]'s range-partitioned ranking.
+  * Rebuilding the same query N times (a bench loop, the differential
+  * sweep, a retried pipeline stage) reuses ONE cache entry instead of
+  * registering N: block-manager storage is bounded by the number of
+  * DISTINCT input plans, not by call count.
   *
   * Keyed on (session, canonicalized analyzed plan, input-file snapshot).
   * File-source plans canonicalize by root path, so the plan alone cannot
@@ -22,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   * One access-ordered LRU of [[MaxEntries]]; an evicted entry is
   * unpersisted, so a long-lived session building many distinct inputs
   * cannot accrete persists forever. Plans already handed out stay
-  * correct after an eviction, [[release]] or [[clear]] — lineage
+  * correct after an eviction or [[clear]] — lineage
   * recomputes; they just lose the shared cache.
   *
   * Not a [[graft.SessionCache]]: that memo drops a dead session's
@@ -31,25 +31,24 @@ import org.apache.spark.storage.StorageLevel
   * shares; and its stable-name keys need no bound, plan keys do.
   */
 object PersistedPlans {
-  private[graft] type Key = (SparkSession, LogicalPlan, Long)
+  private type Key = (SparkSession, LogicalPlan, Long)
 
   private val MaxEntries = 8
   private val entries =
-    new java.util.LinkedHashMap[Key, Seq[DataFrame]](16, 0.75f, true) {
+    new java.util.LinkedHashMap[Key, DataFrame](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[Key, Seq[DataFrame]]): Boolean = {
+          e: java.util.Map.Entry[Key, DataFrame]): Boolean = {
         val evict = size() > MaxEntries
-        if (evict) unpersist(e.getValue)
+        if (evict) e.getValue.unpersist(blocking = false)
         evict
       }
     }
 
-  /** The frames persisted for `frame`'s plan: the memoized ones on a
-    * hit, else those `build` returns. `build` must only MARK frames for
+  /** The frame persisted for `frame`'s plan: the memoized one on a hit,
+    * else the one `build` returns. `build` must only MARK its frame for
     * persisting (no job runs at compose time) and must depend on nothing
     * but `frame`'s plan and the session. */
-  private[graft] def apply(frame: DataFrame)(
-      build: => Seq[DataFrame]): (Key, Seq[DataFrame]) = {
+  private[graft] def apply(frame: DataFrame)(build: => DataFrame): DataFrame = {
     val analyzed = frame.queryExecution.analyzed
     val key = (frame.sparkSession, analyzed.canonicalized, snapshot(analyzed))
     entries.synchronized {
@@ -62,11 +61,9 @@ object PersistedPlans {
         // the upstream plan on every downstream action. `storageLevel`
         // asks Spark's CacheManager, so it sees the eviction; persist on
         // a now-uncached Dataset simply re-registers the plan.
-        hit.foreach { f =>
-          if (f.storageLevel == StorageLevel.NONE)
-            f.persist(StorageLevel.MEMORY_AND_DISK)
-        }
-        (key, hit)
+        if (hit.storageLevel == StorageLevel.NONE)
+          hit.persist(StorageLevel.MEMORY_AND_DISK)
+        hit
       } else {
         // A same-plan entry under a DIFFERENT snapshot means the source
         // directory was rewritten. Missing our key is not enough: the
@@ -79,17 +76,16 @@ object PersistedPlans {
         entries.keySet().toArray(Array.empty[Key])
           .filter(k => k._1 == key._1 && k._2 == key._2 && k._3 != key._3)
           .foreach(release)
-        val frames = build
-        entries.put(key, frames)
-        (key, frames)
+        val persisted = build
+        entries.put(key, persisted)
+        persisted
       }
     }
   }
 
-  /** Unpersist and forget one entry (no-op if absent) — for eager callers
-    * done with their frames. */
-  private[graft] def release(key: Key): Unit = entries.synchronized {
-    Option(entries.remove(key)).foreach(unpersist)
+  /** Unpersist and forget one entry (no-op if absent). */
+  private def release(key: Key): Unit = entries.synchronized {
+    Option(entries.remove(key)).foreach(_.unpersist(blocking = false))
   }
 
   /** Release every entry — call between pipeline stages to return
@@ -98,14 +94,9 @@ object PersistedPlans {
     * on it: an overwritten source misses on its snapshot, and the LRU
     * bound unpersists cold entries on its own. */
   def clear(): Unit = entries.synchronized {
-    entries.values().forEach(unpersist)
+    entries.values().forEach(_.unpersist(blocking = false))
     entries.clear()
   }
-
-  // Later frames may be built on earlier ones; releasing them first
-  // keeps Spark from re-caching a dependent under its changed plan.
-  private def unpersist(frames: Seq[DataFrame]): Unit =
-    frames.reverseIterator.foreach(_.unpersist(blocking = false))
 
   /** Order-insensitive 64-bit fingerprint of the plan's input part-file
     * set: Spark writers emit fresh random part names on every write, so

@@ -165,27 +165,16 @@ object Sampling {
     *
     * Cost on top of the pair relation: the CC label propagation (O(V)
     * state per round over the PAIRED nodes only — the overwhelmingly
-    * singleton corpus never enters the loop) plus one left join.
-    *
-    * `rounds` bounds the propagation: a component whose graph DIAMETER
-    * exceeds `rounds` would get multiple representatives and could
-    * split across train/test — exactly the leakage this function
-    * exists to prevent — so the default matches
-    * [[Components.clusterLabels]]' 6 (LSH dup groups at real
-    * thresholds are near-cliques, diameter ≤ 2; 6 is 3× margin). For
-    * adversarial long-chain relations raise `rounds` (one-hop min-label
-    * propagation: each round extends the representative's reach by one
-    * edge) — an under-provisioned rounds shows up as a split cluster,
-    * which the q_leakage_split oracle (TRUE-fixpoint recursive CTE)
-    * turns into a red row. */
+    * singleton corpus never enters the loop) plus one left join. The
+    * propagation runs to convergence, so a cluster of any diameter gets
+    * one representative and lands whole in one split. */
   def leakageSafeSplit(
       docs: DataFrame,
       idCol: String,
       pairs: DataFrame,
       fractions: Seq[(String, Double)],
-      rounds: Int = 6,
       salt: String = ""): DataFrame = {
-    val labels = Components.clusterLabels(pairs, rounds = rounds)
+    val labels = Components.clusterLabels(pairs)
       .select(col("node").as(idCol), col("label").as("__rep"))
     docs.join(labels, Seq(idCol), "left")
       .withColumn("split",
@@ -241,8 +230,7 @@ object Sampling {
     // corpus-sized cache entry instead of registering one per invocation
     val base = df.repartitionByRange(p, order: _*)
       .withColumn("__pid", spark_partition_id())
-    val (_, Seq(ranked)) =
-      PersistedPlans(base)(Seq(base.persist(StorageLevel.MEMORY_AND_DISK)))
+    val ranked = PersistedPlans(base)(base.persist(StorageLevel.MEMORY_AND_DISK))
     val wOff = Window.orderBy("__pid")
       .rowsBetween(Window.unboundedPreceding, -1)
     val offDf = broadcast(

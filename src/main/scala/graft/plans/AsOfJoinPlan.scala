@@ -65,14 +65,17 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinPlan]] to [[AsOfJoinExec]]; everything else falls
-  * through to Spark's built-in strategies. */
+/** Plans graft's logical operators — [[AsOfJoinPlan]] to
+  * [[AsOfJoinExec]], [[ConnectedComponents]] to [[ConnectedComponentsExec]];
+  * everything else falls through to Spark's built-in strategies. */
 object GraftStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsOfJoinPlan =>
       AsOfJoinExec(p.leftKeys, p.rightKeys, p.leftTime, p.rightTime,
         p.rightValues, p.outputValues, p.isInner,
         planLater(p.left), planLater(p.right)) :: Nil
+    case p: ConnectedComponents =>
+      ConnectedComponentsExec(planLater(p.child), p.a, p.b, p.node, p.label) :: Nil
     case _ => Nil
   }
 }

@@ -46,4 +46,11 @@ object GraftPlanBridge {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental
     if (!exp.extraStrategies.contains(s)) exp.extraStrategies = exp.extraStrategies :+ s
   }
+
+  /** Drop a locally checkpointed RDD's blocks now, once its caller is
+    * done with it. `RDD.unpersist` does the same but logs a warning per
+    * call that the lineage cannot be recomputed — noise for a loop that
+    * frees one checkpoint per round. Spark-private; bridged here. */
+  def freeCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = true)
 }

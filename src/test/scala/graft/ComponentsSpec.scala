@@ -35,9 +35,7 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
       (10L, 11L), (11L, 12L), (10L, 12L),
       (20L, 21L), (31L, 30L), (30L, 32L))
     val pairs = edges.toDF("a_id", "b_id")
-    val expected = unionFind(edges)
-    assert(labelsOf(Components.clusterLabels(pairs)) == expected)
-    assert(labelsOf(Components.connectedComponents(pairs)) == expected)
+    assert(labelsOf(Components.clusterLabels(pairs)) == unionFind(edges))
   }
 
   test("null endpoints name no node: both faces return the same labels") {
@@ -50,11 +48,17 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
       df.collect().map(r => (r.get(0), r.get(1))).toSet
     val expected = Set[(Any, Any)]((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L))
     assert(labels(Components.clusterLabels(pairs)) == expected)
-    assert(labels(Components.connectedComponents(pairs)) == expected)
     val docs = Seq(1L, 2L, 3L, 5L, 6L).toDF("id")
     assert(Components.dedupByCluster(docs, pairs, "id").as[Long].collect()
       .toSet == Set(1L, 3L, 5L))
-    PersistedPlans.clear()
+  }
+
+  test("string ids: labels are the min id of each component") {
+    val s = spark
+    import s.implicits._
+    val pairs = Seq(("d", "c"), ("c", "b"), ("x", "y"), ("b", "e")).toDF("a_id", "b_id")
+    val labels = Components.clusterLabels(pairs).as[(String, String)].collect().toMap
+    assert(labels == Map("b" -> "b", "c" -> "b", "d" -> "b", "e" -> "b", "x" -> "x", "y" -> "x"))
   }
 
   test("random graph: lazy and eager faces both match union-find") {
@@ -62,77 +66,125 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
     import s.implicits._
     val rnd = new Random(7)
     // 150 edges over 120 nodes: several mid-size components + singleton
-    // pairs; diameters stay small, in range for the lazy default rounds
+    // pairs
     val edges = Seq.fill(150)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
       .filter { case (a, b) => a != b }
     val pairs = edges.toDF("a_id", "b_id")
-    val expected = unionFind(edges)
-    assert(labelsOf(Components.clusterLabels(pairs, rounds = 10)) == expected)
-    assert(labelsOf(Components.connectedComponents(pairs)) == expected)
+    assert(labelsOf(Components.clusterLabels(pairs)) == unionFind(edges))
   }
 
   test("long chain: eager converges past the lazy round horizon") {
     val s = spark
     import s.implicits._
     val edges = (0L until 30L).map(i => (i, i + 1)) // diameter 30
-    val pairs = edges.toDF("a_id", "b_id")
-    // lazy with rounds=6 only propagates 6 hops — far end NOT labeled 0
-    val lazySix = labelsOf(Components.clusterLabels(pairs, rounds = 6))
-    assert(lazySix(30L) != 0L)
-    // eager iterates to the true fixpoint
-    val eager = labelsOf(Components.connectedComponents(pairs))
-    assert(eager == unionFind(edges))
-    assert(eager.values.forall(_ == 0L))
+    val labels = labelsOf(Components.clusterLabels(edges.toDF("a_id", "b_id")))
+    assert(labels == unionFind(edges))
+    assert(labels.values.forall(_ == 0L))
   }
 
-  test("connectedComponents frees per-round state: one checkpoint survives") {
+  test("a diameter-11 chain is one cluster on every face") {
+    val s = spark
+    import s.implicits._
+    // 12 nodes 1..12 in a path: exact labels need 11 propagation rounds,
+    // more than the 6 a fixed-depth unroll gives
+    val edges = (1L until 12L).map(i => (i, i + 1))
+    val pairs = edges.toDF("a_id", "b_id")
+    val labels = labelsOf(Components.clusterLabels(pairs))
+    assert(labels == unionFind(edges))
+    assert(labels.values.toSet == Set(1L), s"chain got labels ${labels.values.toSet}")
+    val docs = (1L to 20L).map(i => (i, s"doc $i")).toDF("id", "text")
+    assert(Components.dedupByCluster(docs, pairs, "id")
+      .select("id").as[Long].collect().toSet == Set(1L) ++ (13L to 20L))
+    val split = Sampling.leakageSafeSplit(docs, "id", pairs,
+        Seq("train" -> 0.5, "test" -> 0.5))
+      .select("id", "split").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert((1L to 12L).map(split).toSet.size == 1, s"chain split apart: $split")
+  }
+
+  test("clusterLabels frees per-round state: one checkpoint survives an action") {
     val s = spark
     import s.implicits._
     // long chain -> many rounds -> many intermediate checkpoints to leak
     val pairs = (0L until 20L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val labels = Components.connectedComponents(pairs)
-    assert(labels.count() == 21)
+    assert(Components.clusterLabels(pairs).count() == 21)
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    // every per-round checkpoint and both edge caches must be freed by
-    // the time the call returns; only the returned frame's checkpoint
-    // RDD may remain registered
-    assert(added.size <= 1,
-      s"connectedComponents leaked ${added.size} persistent RDDs")
+    // every per-round checkpoint and the edge cache must be freed by the
+    // time the action returns; only the final round's checkpoint, which
+    // backs the action's input, may remain registered
+    assert(added.size <= 1, s"clusterLabels leaked ${added.size} persistent RDDs")
+  }
+
+  test("a persisted frame over clusterLabels materializes (no cache-lock deadlock)") {
+    val s = spark
+    import s.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // Building a persisted frame holds the lock of the cache it fills while
+    // the plan under it runs, and AQE runs the exchange above the components
+    // node on another thread. Releasing the loop's edges through the
+    // CacheManager from there waited on that same lock forever.
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a_id", "b_id")
+    val sizes = Components.clusterLabels(pairs).groupBy("label").count().persist()
+    val n = Await.result(Future(sizes.count()), 120.seconds)
+    sizes.unpersist()
+    assert(n == 2)
+  }
+
+  test("clusterLabels composes with no job and runs a pinned job count per action") {
+    val s = spark
+    import s.implicits._
+    // a pair and a 4-node chain: diameter 3, so round 1, 2 steps that
+    // change labels and one that confirms the fixpoint. One job a step
+    // (its changed-count materializes the round; the first also runs the
+    // edge shuffle and round 1), 2 for the count. The same action ran 19
+    // jobs as a 6-round unroll.
+    val pairs = Seq((1L, 2L), (10L, 11L), (11L, 12L), (12L, 13L)).toDF("a_id", "b_id")
+    var labels: org.apache.spark.sql.DataFrame = null
+    assert(TestSpark.jobsStartedBy { labels = Components.clusterLabels(pairs) } == 0)
+    val jobs = TestSpark.jobsStartedBy(assert(labels.count() == 6))
+    info(s"jobs per action: $jobs")
+    assert(jobs == 5, s"clusterLabels(...).count() ran $jobs jobs")
   }
 
   test("sym cache is memoized per input plan and releasable") {
     val s = spark
     import s.implicits._
     PersistedPlans.clear()
-    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("a_id", "b_id")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    // N rebuilds of the same lazy query must register ONE pair of cache
-    // entries, not 2N (the round-8 per-call accumulation)
+    def registered = spark.sparkContext.getPersistentRDDs.keySet
+    def pairs = Seq((1L, 2L), (2L, 3L)).toDF("a_id", "b_id")
+    // the symmetrized edges live for one action and are released before
+    // the exec returns: rebuilding the same query N times holds no edge
+    // blocks, each action leaves at most its final round's checkpoint
     (1 to 5).foreach { _ =>
-      assert(Components.clusterLabels(Seq((1L, 2L), (2L, 3L))
-        .toDF("a_id", "b_id")).count() == 3)
+      val prior = registered
+      assert(Components.clusterLabels(pairs).count() == 3)
+      val added = registered -- prior
+      assert(added.size <= 1, s"a clusterLabels action left ${added.size} persistent RDDs")
     }
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.size <= 2,
-      s"5 identical clusterLabels builds registered ${added.size} caches")
-    // a DIFFERENT pair relation gets its own entry
-    assert(Components.clusterLabels(Seq((7L, 8L)).toDF("a_id", "b_id"))
-      .count() == 2)
-    val added2 = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added2.size > added.size)
-    // a budget ranking lives in the same memo
-    val docs = (1L to 50L).map(i => (i, 1, 10L)).toDF("id", "score", "toks")
-    assert(Sampling.selectByBudget(docs, "score", "id", "toks", 100L, 3)
-      .count() == 10)
-    val added3 = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added3.size > added2.size)
+    // the persisted-plan memo keeps ONE ranking per input plan: five
+    // rebuilds of the same budget query register one entry, not five
+    def ranking(score: Int) = {
+      val prior = registered
+      val docs = (1L to 50L).map(i => (i, score, 10L)).toDF("id", "score", "toks")
+      assert(Sampling.selectByBudget(docs, "score", "id", "toks", 100L, 3)
+        .count() == 10)
+      registered -- prior
+    }
+    val rebuilds = (1 to 5).map(_ => ranking(1))
+    assert(rebuilds.head.nonEmpty && rebuilds.tail.forall(_.isEmpty),
+      s"5 identical selectByBudget builds registered ${rebuilds.map(_.size)}")
+    // a DIFFERENT input plan gets its own entry
+    val other = ranking(2)
+    assert(other.nonEmpty)
     // one explicit release drops every memoized entry's blocks
     PersistedPlans.clear()
-    val after = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(after.isEmpty,
-      s"PersistedPlans.clear left ${after.size} persistent RDDs registered")
+    val left = (rebuilds.head ++ other).intersect(registered)
+    assert(left.isEmpty, s"PersistedPlans.clear left ${left.size} persistent RDDs registered")
     // released plans remain correct (lineage recompute)
+    val docs = (1L to 50L).map(i => (i, 1, 10L)).toDF("id", "score", "toks")
+    assert(Sampling.selectByBudget(docs, "score", "id", "toks", 100L, 3).count() == 10)
     assert(labelsOf(Components.clusterLabels(pairs)) ==
       unionFind(Seq((1L, 2L), (2L, 3L))))
     PersistedPlans.clear()
@@ -143,46 +195,29 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
     import s.implicits._
     PersistedPlans.clear()
     def registered = spark.sparkContext.getPersistentRDDs.keySet
-    // 8 distinct edge relations fill the memo, oldest first
-    val edgeRdds = (1L to 8L).map { i =>
-      val before = registered
-      assert(Components.clusterLabels(Seq((i, 100L + i)).toDF("a_id", "b_id"))
-        .count() == 2)
-      registered -- before
+    def ranking(score: Int) = {
+      val prior = registered
+      val docs = (1L to 50L).map(i => (i, score, 10L)).toDF("id", "score", "toks")
+      assert(Sampling.selectByBudget(docs, "score", "id", "toks", 100L, 3)
+        .count() == 10)
+      registered -- prior
     }
-    assert(edgeRdds.forall(_.nonEmpty))
-    // a ninth entry, from the other operator, evicts the oldest edge entry
-    val docs = (1L to 50L).map(i => (i, 1, 10L)).toDF("id", "score", "toks")
-    assert(Sampling.selectByBudget(docs, "score", "id", "toks", 100L, 3)
-      .count() == 10)
+    // 8 distinct rankings fill the memo, oldest first
+    val rankings = (1 to 8).map(ranking)
+    assert(rankings.forall(_.nonEmpty))
+    // clusterLabels runs in the same session but takes no slot (its edges
+    // are per-action state), so it evicts no ranking
+    assert(Components.clusterLabels(Seq((1L, 2L)).toDF("a_id", "b_id")).count() == 2)
+    val afterLabels = registered
+    assert(rankings.forall(_.subsetOf(afterLabels)),
+      "a clusterLabels action evicted a memoized ranking")
+    // a ninth ranking evicts the least recently used one
+    assert(ranking(9).nonEmpty)
     val live = registered
-    assert(edgeRdds.head.intersect(live).isEmpty,
-      "the least recently used edge entry is still persisted")
-    assert(edgeRdds.tail.forall(_.subsetOf(live)),
-      "a more recently used edge entry was unpersisted")
-    PersistedPlans.clear()
-  }
-
-  test("sym cache survives an external clearCache: hit path re-persists") {
-    val s = spark
-    import s.implicits._
-    PersistedPlans.clear()
-    def pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a_id", "b_id")
-    assert(Components.clusterLabels(pairs).count() == 5)
-    // an EXTERNAL clearCache (bench hygiene, ops memory pressure) strips
-    // the persist out from under the memo entry without touching the map
-    spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    // the next compose of the SAME plan hits the memo; pre-fix it served
-    // the now-unpersisted frames and every action silently recomputed
-    // the pair plan ~4*(rounds+1) times — the hit path must detect
-    // storageLevel == NONE and re-register the persists
-    val labels = Components.clusterLabels(pairs)
-    assert(labels.count() == 5)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
-      "post-clearCache hit served an unpersisted sym cache entry")
-    assert(labelsOf(labels) ==
-      unionFind(Seq((1L, 2L), (2L, 3L), (5L, 6L))))
+    assert(rankings.head.intersect(live).isEmpty,
+      "the least recently used ranking is still persisted")
+    assert(rankings.tail.forall(_.subsetOf(live)),
+      "a more recently used ranking was unpersisted")
     PersistedPlans.clear()
   }
 

@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.PsDataFrame
-import graft.operators.Dedup
+import graft.operators.{Components, Dedup}
+import graft.plans.ConnectedComponentsExec
 import graft.sources.PsIO
 
 /** Plan-shape regression guards for the scale claims the docs make:
@@ -337,5 +339,24 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     val joined = li.join(small.df, li("l_linenumber") === small.df("code"))
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(500))
+  }
+
+  test("clusterLabels plans one ConnectedComponentsExec whatever the diameter") {
+    val s = spark
+    import s.implicits._
+    // joins above the node in dedupByCluster's plan: the rounds run
+    // inside the node, so only the anti-join against the docs remains
+    def joinsAbove(n: Long) = {
+      val pairs = (1L until n).map(i => (i, i + 1)).toDF("a_id", "b_id")
+      val docs = (1L to n).map(i => (i, s"doc $i")).toDF("id", "text")
+      val plan = Components.dedupByCluster(docs, pairs, "id").queryExecution.sparkPlan
+      val ccs = plan.collect { case c: ConnectedComponentsExec => c }
+      assert(ccs.size == 1, plan.treeString)
+      plan.collect {
+        case j: BaseJoinExec if j.exists(_.isInstanceOf[ConnectedComponentsExec]) => j
+      }.size
+    }
+    assert(joinsAbove(3) == 1)
+    assert(joinsAbove(30) == 1, "the plan grew with the graph's diameter")
   }
 }

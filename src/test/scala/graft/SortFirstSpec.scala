@@ -85,7 +85,7 @@ class SortFirstSpec extends AnyFunSuite {
     // chain 1-2-3 (diameter 2), clique {10,11,12}, singleton via self-pair 20
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (10L, 12L),
       (20L, 20L)).toDF("a_id", "b_id")
-    val got = Components.clusterLabels(pairs, rounds = 4)
+    val got = Components.clusterLabels(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L)
