@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.SQLContext
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftColumnBridge, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -18,22 +17,25 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `CREATE TEMPORARY VIEW t USING graftlake OPTIONS (path '...')`
   *    read a versioned lake with full parquet machinery (vectorized
   *    decode, footer PushedFilters, whole-stage codegen);
-  *  - ANY user predicate on a stats-indexed int/long column prunes
-  *    whole files from the manifest's footer envelopes at PLANNING —
-  *    the caller no longer hand-feeds bounds to
-  *    [[LakeVersions.readPruned]]; the scan's listFiles derives them
-  *    from the pushed-down filters itself (the Iceberg/Delta
-  *    data-skipping shape, reduced to the manifest we already have);
+  *  - ANY user predicate on a stats-indexed int/long/string column
+  *    prunes whole files from the manifest's footer envelopes at
+  *    PLANNING — the scan's listFiles derives the bounds from the
+  *    pushed-down filters itself (the Iceberg/Delta data-skipping
+  *    shape, reduced to the manifest we already have);
   *  - partition columns surface from the manifest's
   *    partition-qualified relpaths with NO directory listing, and
   *    partition predicates prune at planning;
   *  - `versionAsOf` / `timestampAsOf` options give SQL users time
   *    travel over surviving manifests.
   *
-  * Scale shape: planning cost is O(manifest files) driver arithmetic —
-  * no fs listing, no footer reads (envelopes were recorded at commit);
-  * pruned files are never opened. The reference has no table format at
-  * all (io.py reads loose files); this is §2.11 extension surface. */
+  * The same index serves every [[LakeVersions]] read (`read`,
+  * `readPruned`, time travel, `appendsBetween`, the row-level ops and
+  * the maintenance rewrites): a manifest becomes a scan in exactly one
+  * way. Scale shape: planning cost is O(manifest files) driver
+  * arithmetic — no fs listing, no footer reads (envelopes were recorded
+  * at commit); pruned files are never opened. The reference has no
+  * table format at all (io.py reads loose files); this is §2.11
+  * extension surface. */
 final class GraftLakeSource extends RelationProvider with DataSourceRegister {
   // no dash: `USING graftlake` must parse as a bare SQL identifier
   override def shortName(): String = "graftlake"
@@ -54,70 +56,82 @@ final class GraftLakeSource extends RelationProvider with DataSourceRegister {
     }
     require(asOfV.isEmpty || asOfTs.isEmpty,
       "graftlake: give versionAsOf OR timestampAsOf, not both")
-    GraftLakeSource.relation(spark, dir, asOfV.orElse(asOfTs))
+    val version = asOfV.orElse(asOfTs)
+    GraftLakeSource.relation(spark, new GraftLakeFileIndex(spark, new HPath(dir),
+      LakeVersions.resolvedState(spark, dir, version),
+      followLatest = version.isEmpty))
   }
 }
 
 object GraftLakeSource {
-  private[sources] def relation(spark: SparkSession, dir: String,
-                                version: Option[Long]): BaseRelation = {
-    val index = new GraftLakeFileIndex(spark, dir, version)
+  /** The parquet relation over one manifest index. Partition columns
+    * come after the data columns, as in every file source. */
+  private[sources] def relation(spark: SparkSession,
+                                index: GraftLakeFileIndex): HadoopFsRelation =
     HadoopFsRelation(index, index.partitionSchema, index.dataSchema,
       bucketSpec = None, new ParquetFileFormat, options = Map.empty)(spark)
-  }
 }
 
-/** A [[FileIndex]] served from one pinned manifest. `listFiles` is
+/** A [[FileIndex]] served from one resolved manifest state `pinned`
+  * (schema authoritative — see [[LakeVersions.resolvedState]]), whose
+  * `files` may be any subset of the version's files. `listFiles` is
   * where the leverage lives: Spark's file-source planning hands it the
   * pushed partition AND data predicates, and both feed
   * [[LakeVersions.pruneFiles]]'s proof rule (drop a file only when its
   * partition value or recorded footer envelope excludes the range;
   * missing evidence keeps the file).
   *
-  * Version semantics: an explicit `versionAsOf`/`timestampAsOf` pin is
-  * immutable. An UN-pinned index resolves latest at creation and
-  * re-resolves on `refresh()` (`REFRESH TABLE view`), so a long-lived
-  * temp view can follow a lake that streaming promotion keeps
-  * advancing; the relation's SCHEMA and partition layout stay fixed at
-  * creation (a Spark relation's schema is immutable by contract) —
-  * recreate the view to pick up widened columns. */
+  * Two indexes are equal when they name the same files under the same
+  * root — as `InMemoryFileIndex` compares by its paths — so a cached
+  * frame is reused by a later read of the same files.
+  *
+  * Version semantics: a pinned index is immutable. A `followLatest`
+  * index (an un-pinned SQL face) re-resolves latest on `refresh()`
+  * (`REFRESH TABLE view`), so a long-lived temp view can follow a lake
+  * that streaming promotion keeps advancing; the relation's SCHEMA and
+  * partition layout stay fixed at creation (a Spark relation's schema
+  * is immutable by contract) — recreate the view to pick up widened
+  * columns. */
 private[sources] final class GraftLakeFileIndex(
-    spark: SparkSession, dir: String,
-    pinnedVersion: Option[Long]) extends FileIndex {
+    spark: SparkSession, lake: HPath, pinned: LakeVersions.ManifestState,
+    followLatest: Boolean) extends FileIndex {
 
-  // resolvedState, not pinned: a legacy v2 manifest's header may be
-  // narrower than its files' union, and this index's schema IS the
-  // relation's schema — trusting the narrow header would silently
-  // drop columns from the SQL face (and from deleteWhere's candidate
-  // probe, which plans through it)
-  @volatile private var m: LakeVersions.ManifestState =
-    LakeVersions.resolvedState(spark, dir, pinnedVersion)
+  @volatile private var m: LakeVersions.ManifestState = pinned
 
-  private val hadoopConf = spark.sparkContext.hadoopConfiguration
-  private val lakeRoot: HPath = {
-    val p = new HPath(dir)
-    p.getFileSystem(hadoopConf).makeQualified(p)
-  }
+  private val fs = lake.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val lakeRoot: HPath = fs.makeQualified(lake)
+  // scheme-less root: qualifying a child of it keeps the filesystem's
+  // own URI form (`file:///...`), which `spark.read` also reports
+  private val rootDir = new HPath(lakeRoot.toUri.getPath)
+  private def pathOf(e: LakeVersions.FileEntry): HPath =
+    fs.makeQualified(new HPath(rootDir, e.relpath))
+
+  /** The manifest schema, nullable at every depth: a file-source read
+    * yields nullable columns whatever the committing frame declared. */
+  val schema: StructType = GraftColumnBridge.nullableSchema(m.schema)
 
   override val partitionSchema: StructType =
     StructType(m.partitionBy.map { c =>
-      m.schema.find(_.name == c).getOrElse(throw new IllegalStateException(
+      schema.find(_.name == c).getOrElse(throw new IllegalStateException(
         s"graftlake: partition column $c missing from the manifest schema"))
-        .copy(nullable = true)
     })
 
   val dataSchema: StructType =
-    StructType(m.schema.filterNot(f => m.partitionBy.contains(f.name))
-      .map(_.copy(nullable = true)))
+    StructType(schema.filterNot(f => m.partitionBy.contains(f.name)))
 
   override def rootPaths: Seq[HPath] = Seq(lakeRoot)
   override def sizeInBytes: Long = m.files.map(_.len).sum
   override def inputFiles: Array[String] =
-    m.files.map(e => new HPath(lakeRoot, e.relpath).toString).toArray
+    m.files.map(e => pathOf(e).toUri.toString).toArray
   override def refresh(): Unit =
-    // a PINNED manifest is immutable; an un-pinned index re-resolves
-    // latest so REFRESH TABLE follows an advancing lake
-    if (pinnedVersion.isEmpty) m = LakeVersions.resolvedState(spark, dir, None)
+    if (followLatest) m = LakeVersions.resolvedState(spark, lakeRoot.toString, None)
+
+  private def relpaths: Seq[String] = m.files.map(_.relpath)
+  override def equals(other: Any): Boolean = other match {
+    case o: GraftLakeFileIndex => o.lakeRoot == lakeRoot && o.relpaths == relpaths
+    case _                     => false
+  }
+  override def hashCode: Int = (lakeRoot, relpaths).##
 
   /** Columns whose predicates can become prune bounds: int/long in the
     * table schema (the only envelope type the manifest records —
@@ -258,42 +272,26 @@ private[sources] final class GraftLakeFileIndex(
       }
     }.toMap
 
+  private val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+
   /** Typed partition values for one file, parsed from its
     * partition-qualified relpath (the manifest IS the partition
-    * index). Supports the types a path can round-trip exactly. */
+    * index) through Spark's own partition-value conversion, so every
+    * type a partitioned `spark.read` types reads here too. */
   private def partitionValuesOf(relpath: String): Seq[Any] = {
     val segs = relpath.split("/").iterator.filter(_.contains("="))
       .map { s => val i = s.indexOf('='); (s.substring(0, i), s.substring(i + 1)) }
       .toMap
     partitionSchema.fields.toSeq.map { f =>
-      val raw = segs.getOrElse(f.name, throw new IllegalStateException(
-        s"graftlake: $relpath has no ${f.name}= segment"))
-      if (raw == "__HIVE_DEFAULT_PARTITION__") null
-      else {
-        // Spark's own inverse of the escaping the writer applied —
-        // hand-rolling it would have to stay byte-identical forever
-        val v = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(raw)
-        f.dataType match {
-          case IntegerType => v.toInt
-          case LongType    => v.toLong
-          case ShortType   => v.toShort
-          case ByteType    => v.toByte
-          case BooleanType => v.toBoolean
-          case DoubleType  => v.toDouble
-          case FloatType   => v.toFloat
-          case StringType  => UTF8String.fromString(v)
-          case DateType    => java.time.LocalDate.parse(v).toEpochDay.toInt
-          case other => throw new IllegalArgumentException(
-            s"graftlake: unsupported partition column type " +
-              s"${other.simpleString} for ${f.name}")
-        }
-      }
+      GraftColumnBridge.partitionValue(f.dataType,
+        segs.getOrElse(f.name, throw new IllegalStateException(
+          s"graftlake: $relpath has no ${f.name}= segment")), zone)
     }
   }
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val cur = m // one state per planning pass, even across a refresh()
     // every pushed conjunct — partition or data — can contribute prune
     // bounds: pruneFiles checks BOTH the relpath's partition value and
     // the recorded footer envelope
@@ -311,8 +309,8 @@ private[sources] final class GraftLakeFileIndex(
       else {
         val bs = bounds.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) }
         val ss = strBounds.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) }
-        if (bs.isEmpty && ss.isEmpty) m.files
-        else LakeVersions.pruneFilesOpt(m, bs, ss)
+        if (bs.isEmpty && ss.isEmpty) cur.files
+        else LakeVersions.pruneFilesOpt(cur, bs, ss)
       }
     val grouped: Seq[(Seq[Any], Seq[LakeVersions.FileEntry])] =
       if (partitionSchema.isEmpty) Seq(Seq.empty[Any] -> survivors)
@@ -336,7 +334,7 @@ private[sources] final class GraftLakeFileIndex(
     kept.map { case (vals, files) =>
       PartitionDirectory(InternalRow.fromSeq(vals),
         files.map(e => new FileStatus(e.len, false, 1, 128L << 20, 0L,
-          new HPath(lakeRoot, e.relpath))).toArray)
+          pathOf(e))).toArray)
     }
   }
 }

@@ -49,15 +49,16 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
   *    them; [[read]] pins any surviving version, and
   *    [[graft.operators.Snapshot.snapshotDiff]] over two pinned reads
   *    is the audit diff (the delta algebra already exists).
-  *  - THE MANIFEST IS THE FILE INDEX. A partitioned commit records
+  *  - THE MANIFEST IS THE FILE INDEX. Every read plans through one
+  *    [[GraftLakeFileIndex]] built from the pinned manifest: no
+  *    listing, no footer reads. A partitioned commit records
   *    partition-qualified relpaths plus the partition column list, so
-  *    a pinned [[read]] surfaces the partition columns (Spark's
-  *    `basePath` discovery over exactly the manifest's files) and
-  *    PartitionFilters prune WITHOUT any directory listing; a commit
-  *    with `statsCols` records per-file row counts and int/long
-  *    min/max, so [[readPruned]] drops whole files against range
-  *    predicates before Spark ever plans the scan — at 100× the whole
-  *    point of a manifest is pruning without listing.
+  *    a pinned [[read]] surfaces the partition columns typed by the
+  *    header schema and PartitionFilters prune WITHOUT any directory
+  *    listing; a commit with `statsCols` records per-file row counts
+  *    and int/long min/max, so [[readPruned]] drops whole files
+  *    against range predicates before Spark ever plans the scan — at
+  *    100× the whole point of a manifest is pruning without listing.
   *
   * Scale shape: a commit's driver-side work is one manifest write plus
   * one lock create — O(files) text lines, no listing of the lake
@@ -598,10 +599,7 @@ object LakeVersions {
     val preLandTableSchema: Option[org.apache.spark.sql.types.StructType] =
       prevHeader.map { case (headerSchema, _, _, authoritative) =>
         if (authoritative) headerSchema
-        else {
-          val p = readManifest(fs, lake, latestPre)
-          frameOver(spark, lake, p, p.files).schema
-        }
+        else resolved(spark, lake, readManifest(fs, lake, latestPre)).schema
       }
     preLandTableSchema.foreach { tableSchema =>
       try mergeLakeSchemas(tableSchema, df.schema): Unit
@@ -750,8 +748,7 @@ object LakeVersions {
             // fallback recovery is defensively unreachable.
             val prevSchema =
               if (p.headerAuthoritative) p.schema
-              else preLandTableSchema.getOrElse(
-                frameOver(spark, lake, p, p.files).schema)
+              else preLandTableSchema.getOrElse(resolved(spark, lake, p).schema)
             try mergeLakeSchemas(prevSchema, df.schema)
             catch { case e: Exception => throw new IllegalStateException(
               s"LakeVersions.commit: table schema changed incompatibly " +
@@ -792,81 +789,69 @@ object LakeVersions {
     }
   }
 
-  private def emptyFrame(spark: SparkSession,
-                         schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Build the frame over an explicit manifest file list, read with
-    * the manifest header's schema — the header IS the table's merged
-    * shape (every commit records the append-merged schema), so the
-    * read needs no mergeSchema footer-merge job (O(files) footer reads
-    * saved on every read), columns a file predates null-fill, and a
-    * file whose column was since WIDENED (int→long along the
-    * [[mergeLakeSchemas]] lattice) decodes through the parquet
-    * reader's widening promotion. Partitioned lakes read with
-    * `basePath` = the lake root so the manifest's partition-qualified
-    * relpaths surface as real partition columns (typed by the header
-    * schema), and a filter on them becomes PartitionFilters — pruned
-    * at planning, no data touched. */
+  /** The one way a manifest becomes a scan: a parquet relation over a
+    * [[GraftLakeFileIndex]] pinned to `files` (any subset of `m`'s
+    * files), read with the manifest header's schema, nullable at every
+    * depth. The header IS the table's merged shape (every commit
+    * records the append-merged schema), so the read lists nothing and
+    * reads no footer: columns a file predates null-fill, a file whose
+    * column was since WIDENED (int→long along the [[mergeLakeSchemas]]
+    * lattice) decodes through the parquet reader's widening promotion,
+    * and the partition columns come from the manifest's
+    * partition-qualified relpaths, so a filter on them becomes
+    * PartitionFilters — pruned at planning, no data touched. Columns
+    * come in manifest order. A legacy v2 manifest is first
+    * [[resolved]]. */
   private def frameOver(spark: SparkSession, lake: HPath,
                         m: ManifestState, files: Seq[FileEntry]): DataFrame = {
-    if (files.isEmpty) emptyFrame(spark, m.schema)
-    else if (!m.headerAuthoritative) {
-      // legacy v2 manifest: its header is the LAST commit's frame
-      // schema, possibly narrower than the union of its files — only
-      // the mergeSchema footer-merge read is correct there
-      val paths = files.map(e => new HPath(lake, e.relpath).toString)
-      val base = spark.read.option("mergeSchema", "true")
-      if (m.partitionBy.isEmpty) base.parquet(paths: _*)
-      else {
-        val df = base.option("basePath", lake.toString).parquet(paths: _*)
-        val typed = m.schema.fields.filter(f => m.partitionBy.contains(f.name))
-        typed.foldLeft(df) { (d, f) =>
-          d.withColumn(f.name,
-            org.apache.spark.sql.functions.col(f.name).cast(f.dataType))
-        }.select(m.schema.fieldNames.filter(df.columns.contains).map(
-          org.apache.spark.sql.functions.col).toSeq ++
-          df.columns.filterNot(m.schema.fieldNames.contains).map(
-            org.apache.spark.sql.functions.col).toSeq: _*)
-      }
-    } else {
-      val paths = files.map(e => new HPath(lake, e.relpath).toString)
-      val base = spark.read.schema(
-        org.apache.spark.sql.GraftColumnBridge.nullableSchema(m.schema))
-      if (m.partitionBy.isEmpty) base.parquet(paths: _*)
-      else base.option("basePath", lake.toString).parquet(paths: _*)
-        .select(m.schema.fieldNames.map(
-          org.apache.spark.sql.functions.col).toSeq: _*)
-    }
+    val index = new GraftLakeFileIndex(spark, lake,
+      resolved(spark, lake, m).copy(files = files), followLatest = false)
+    val df = spark.baseRelationToDataFrame(GraftLakeSource.relation(spark, index))
+    if (m.partitionBy.isEmpty) df
+    else df.select(index.schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
   }
 
   /** Read a pinned `version` (default: latest). The frame reads
     * EXACTLY the manifest's files — concurrent commits and dead
-    * writers' unreferenced litter are invisible. Schemas across
-    * versions merge losslessly (mergeSchema); partition columns are
-    * surfaced as partition columns (see [[frameOver]]). */
+    * writers' unreferenced litter are invisible; files an older
+    * version wrote with fewer or narrower columns read through the
+    * header's merged schema (see [[frameOver]]). */
   def read(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame = {
-    val (fs, lake) = fsFor(spark, dir)
+    val (_, lake) = fsFor(spark, dir)
     val m = pinned(spark, dir, version)
     frameOver(spark, lake, m, m.files)
   }
 
-  /** [[pinned]] with the schema made AUTHORITATIVE: a legacy v2
-    * header may be narrower than its files' union, so faces that
-    * trust `schema` directly (the graftlake source builds its
-    * relation schema from it) must resolve the union first — one
-    * mergeSchema footer job, only ever paid on legacy manifests. */
+  /** [[pinned]] with the schema made AUTHORITATIVE (see [[resolved]]):
+    * the state every face that trusts `schema` directly plans from —
+    * the graftlake source and the row-level ops' validation. */
   private[sources] def resolvedState(spark: SparkSession, dir: String,
                                      version: Option[Long]): ManifestState = {
-    val m = pinned(spark, dir, version)
-    if (m.headerAuthoritative) m
+    val (_, lake) = fsFor(spark, dir)
+    resolved(spark, lake, pinned(spark, dir, version))
+  }
+
+  /** `m` with an authoritative schema. A legacy v2 header records the
+    * LAST commit's frame schema, possibly narrower than the union of
+    * its files, so the union is recovered with one mergeSchema footer
+    * read — the only footer read any lake read pays, and only on
+    * legacy manifests: the files' merged data columns in header order,
+    * then columns only older files carry; partition columns keep their
+    * header types. */
+  private def resolved(spark: SparkSession, lake: HPath,
+                       m: ManifestState): ManifestState =
+    if (m.headerAuthoritative || m.files.isEmpty) m
     else {
-      val (_, lake) = fsFor(spark, dir)
-      m.copy(schema = frameOver(spark, lake, m, m.files).schema,
+      val footers = spark.read.option("mergeSchema", "true")
+        .parquet(m.files.map(e => new HPath(lake, e.relpath).toString): _*).schema
+      val inHeader = m.schema.fields.flatMap { f =>
+        if (m.partitionBy.contains(f.name)) Some(f) else footers.find(_.name == f.name)
+      }
+      val union = org.apache.spark.sql.types.StructType(
+        (inHeader ++ footers.filterNot(f => m.schema.fieldNames.contains(f.name))).toSeq)
+      m.copy(schema = org.apache.spark.sql.GraftColumnBridge.nullableSchema(union),
         headerAuthoritative = true)
     }
-  }
 
   private[graft] def pinned(spark: SparkSession, dir: String,
                               version: Option[Long]): ManifestState = {
@@ -1081,7 +1066,7 @@ object LakeVersions {
   }
 
   /** Which manifest files does `hits` (a frame derived from the
-    * pinned `graftlake` face, carrying [[HitFileCol]] =
+    * pinned manifest's [[frameOver]], carrying [[HitFileCol]] =
     * input_file_name()) actually touch? Shared by [[deleteWhere]] /
     * [[updateWhere]] / [[mergeInto]] — each refuses an unprovable
     * relpath outright: silently carrying a hit file by reference
@@ -1137,13 +1122,13 @@ object LakeVersions {
     * and row count verbatim, zero bytes moved — and only the files
     * that actually CONTAIN matching rows are rewritten with the
     * predicate anti-applied. Candidate discovery plans through the
-    * graftlake SQL face, so the manifest's stats envelopes file-prune
-    * the probe scan before any data is read. The publish is guarded by
-    * `expectedLatest` = the pinned version: an append landing inside
-    * the read-rewrite-publish window throws (retryable) rather than
-    * being erased. Old versions still read the deleted rows until
-    * [[vacuum]] — retention policy for takedowns is the operator's
-    * call, same as every table format.
+    * manifest index ([[frameOver]]), so the manifest's stats envelopes
+    * file-prune the probe scan before any data is read. The publish is
+    * guarded by `expectedLatest` = the pinned version: an append
+    * landing inside the read-rewrite-publish window throws (retryable)
+    * rather than being erased. Old versions still read the deleted rows
+    * until [[vacuum]] — retention policy for takedowns is the
+    * operator's call, same as every table format.
     *
     * Returns (committedVersion, filesRewritten, filesCarried);
     * a predicate matching nothing commits nothing and returns
@@ -1153,13 +1138,12 @@ object LakeVersions {
     import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, not}
     // version-then-pin, same race note as compactCommit
     val v = latestVersion(spark, dir)
-    val m = pinned(spark, dir, Some(v))
+    val m = resolvedState(spark, dir, Some(v))
     if (m.files.isEmpty) return (v, 0, 0)
     val (_, lake) = fsFor(spark, dir)
-    val face = spark.read.format("graftlake")
-      .option("versionAsOf", v.toString).load(dir)
     val hitRels = hitRelpaths(spark, dir, m, "deleteWhere",
-      face.filter(predicate).withColumn(HitFileCol, input_file_name()))
+      frameOver(spark, lake, m, m.files).filter(predicate)
+        .withColumn(HitFileCol, input_file_name()))
     if (hitRels.isEmpty) return (v, 0, m.files.size)
     val (rewrite, carry) = m.files.partition(e => hitRels(e.relpath))
     val survivors = frameOver(spark, lake, m, rewrite)
@@ -1201,7 +1185,8 @@ object LakeVersions {
     // silent success that starts throwing the first day a row matches
     // — validation must be data-independent. The empty frame resolves
     // the expressions' types without reading a byte.
-    val schemaProbe = emptyFrame(spark, m.schema)
+    val schemaProbe = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
     set.keys.foreach { c =>
       require(m.schema.fieldNames.contains(c),
         s"LakeVersions.updateWhere: SET column $c is not a table column " +
@@ -1227,10 +1212,9 @@ object LakeVersions {
         "cast the expression to the column's type if the change is intended")
     if (m.files.isEmpty) return (v, 0, 0)
     val (_, lake) = fsFor(spark, dir)
-    val face = spark.read.format("graftlake")
-      .option("versionAsOf", v.toString).load(dir)
     val hitRels = hitRelpaths(spark, dir, m, "updateWhere",
-      face.filter(predicate).withColumn(HitFileCol, input_file_name()))
+      frameOver(spark, lake, m, m.files).filter(predicate)
+        .withColumn(HitFileCol, input_file_name()))
     if (hitRels.isEmpty) return (v, 0, m.files.size)
     val (rewrite, carry) = m.files.partition(e => hitRels(e.relpath))
     val base = frameOver(spark, lake, m, rewrite)
@@ -1288,12 +1272,12 @@ object LakeVersions {
     require(keyCols.nonEmpty, "LakeVersions.mergeInto: no key columns")
     val v = latestVersion(spark, dir)
     // the RESOLVED schema: a legacy v2 header can be narrower than the
-    // files' union the face actually reads — validating against it
+    // files' union the scan actually reads — validating against it
     // would refuse a correctly-shaped source (and pass a narrow one
     // that then fails mid-plan in unionByName)
     val m = resolvedState(spark, dir, Some(v))
     // every refusal validates against the resolved TABLE schema, not
-    // the face, so the empty-manifest fast path refuses identically: a
+    // the scan, so the empty-manifest fast path refuses identically: a
     // dup-keyed or re-typed batch must not land just because the
     // table happens to be empty (or to have no matched file)
     val tableCols = m.schema.fields.map(f => f.name -> f.dataType)
@@ -1352,12 +1336,11 @@ object LakeVersions {
       return (next, 0, 0)
     }
     val (_, lake) = fsFor(spark, dir)
-    val face = spark.read.format("graftlake")
-      .option("versionAsOf", v.toString).load(dir)
     // scale valve: a matched table row's key necessarily lies inside
     // the source's key envelope, so bound the probe scan per int/long
-    // key — the graftlake face turns the BETWEEN into manifest prune
-    val probe = intLikeKeys.zipWithIndex.foldLeft(face) { case (f, (k, i)) =>
+    // key — the manifest index turns the BETWEEN into manifest prune
+    val table = frameOver(spark, lake, m, m.files)
+    val probe = intLikeKeys.zipWithIndex.foldLeft(table) { case (f, (k, i)) =>
       // an all-null key column has a null envelope: no bound (the key
       // can never match anyway; the semi-join returns nothing)
       val lo = 3 + 2 * i

@@ -25,6 +25,14 @@ object GraftColumnBridge {
     * shape), but a file-source read always yields nullable columns —
     * reads must declare the schema they can honor. */
   def nullableSchema(s: types.StructType): types.StructType = s.asNullable
+
+  /** Bridge to the sql-private partition-value conversion every file
+    * source applies to a hive path fragment (`col=raw`): unescaping,
+    * the default-partition null, and the date, timestamp and decimal
+    * parsers under the session zone — so the graftlake index types a
+    * partition value exactly as a partitioned `spark.read` does. */
+  def partitionValue(t: types.DataType, raw: String, zone: java.time.ZoneId): Any =
+    execution.datasources.PartitioningUtils.castPartValueToDesiredType(t, raw, zone)
 }
 
 /** Bridge to the sql-private LogicalPlan ↔ DataFrame conversions, for

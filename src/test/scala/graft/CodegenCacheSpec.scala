@@ -25,9 +25,9 @@ class CodegenCacheSpec extends AnyFunSuite with SparkFixture {
       name -> (compiles() - before)
     }
     try {
-      // Two warm-up rotations: the first run of a clustering query
-      // persists Components' symmetrized edges, so from the second run
-      // on its plan reads the cached relation and generates other code.
+      // Two warm-up rotations, as the benchmark makes two warm-up
+      // passes. The first compiles every class the rotation needs; the
+      // second already compiles 0 and is kept as margin.
       rotation()
       rotation()
       val warm = rotation()

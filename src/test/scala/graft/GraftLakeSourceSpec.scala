@@ -156,4 +156,78 @@ class GraftLakeSourceSpec extends AnyFunSuite with SparkFixture {
       .sortBy(_._1).toSeq
     assert(rows == Seq((1, 10L, None), (2, 5000000000L, Some("x"))))
   }
+
+  test("date, timestamp and decimal partitions read the same rows " +
+      "through read and the SQL face") {
+    val s = spark
+    Seq("date" -> "date_add(date'2024-01-01', cast(id % 3 as int))",
+      "timestamp" -> "timestamp'2024-01-01 10:00:00' + make_interval(0, 0, 0, 0, 0, cast(id % 3 as int), 0)",
+      "decimal(5,2)" -> "cast(id % 3 + 0.25 as decimal(5,2))").foreach { case (t, e) =>
+      val dir = lake()
+      LakeVersions.commit(s, dir, s.range(6).selectExpr("id", s"$e as p"),
+        partitionBy = Seq("p")): Unit
+      val viaRead = LakeVersions.read(s, dir)
+      val viaSql = s.read.format("graftlake").load(dir)
+      assert(viaRead.schema("p").dataType.simpleString == t)
+      assert(viaSql.schema("p").dataType.simpleString == t)
+      def rows(df: DataFrame) = df.select("id", "p").orderBy("id").collect().toSeq
+      val want = s.range(6).selectExpr("id", s"$e as p").orderBy("id").collect().toSeq
+      assert(rows(viaRead) == want, t)
+      assert(rows(viaSql) == want, t)
+      // a partition predicate on the typed value prunes and still matches
+      val first = want.head.get(1)
+      assert(rows(viaSql.filter(col("p") === first)) == want.filter(_.get(1) == first), t)
+    }
+  }
+
+  test("a cached lake read is reused by a fresh read of the same files; " +
+      "another version is not") {
+    val s = spark
+    import s.implicits._
+    val dir = lake()
+    LakeVersions.commit(s, dir, Seq((1L, "a"), (2L, "b")).toDF("k", "t")): Unit
+    def cached(df: DataFrame) =
+      df.queryExecution.withCachedData.exists(_.isInstanceOf[
+        org.apache.spark.sql.execution.columnar.InMemoryRelation])
+    def sqlFace(v: Long) =
+      s.read.format("graftlake").option("versionAsOf", v.toString).load(dir)
+    val byRead = LakeVersions.read(s, dir).cache()
+    val bySql = sqlFace(1L).cache()
+    try {
+      byRead.count(): Unit
+      bySql.count(): Unit
+      assert(cached(LakeVersions.read(s, dir)))
+      assert(cached(LakeVersions.read(s, dir, Some(1L))))
+      assert(cached(sqlFace(1L)))
+      assert(cached(s.read.format("graftlake").load(dir)))
+      LakeVersions.commit(s, dir, Seq((3L, "c")).toDF("k", "t")): Unit
+      assert(!cached(LakeVersions.read(s, dir)), "v2 names other files")
+      assert(!cached(sqlFace(2L)))
+      assert(LakeVersions.read(s, dir).count() == 3L)
+    } finally {
+      byRead.unpersist(): Unit
+      bySql.unpersist(): Unit
+    }
+  }
+
+  test("read's inputFiles are manifest files as URIs, hive-escaped " +
+      "partition values included") {
+    val s = spark
+    import s.implicits._
+    val dir = lake()
+    LakeVersions.commit(s, dir,
+      Seq((1L, "a:b c"), (2L, "a%d"), (3L, "plain")).toDF("k", "site"),
+      partitionBy = Seq("site")): Unit
+    val root = new java.io.File(dir).getCanonicalFile.toPath
+    val rels = LakeVersions.pinned(s, dir, None).files.map(_.relpath).toSet
+    val files = LakeVersions.read(s, dir).inputFiles.toSeq
+    assert(files.nonEmpty && files.size == rels.size)
+    files.foreach { f =>
+      val p = java.nio.file.Paths.get(new java.net.URI(f))
+      assert(Files.isRegularFile(p), f)
+      assert(rels(root.relativize(p.toRealPath()).toString), f)
+    }
+    assert(s.read.format("graftlake").load(dir).inputFiles.toSeq.sorted ==
+      files.sorted)
+  }
 }
