@@ -138,13 +138,9 @@ object AvroStreamProbe {
       s"restart after $files batches (no roll-up)", 0)
 
     // 5. lake promotion: the two-query exactly-once variant decodes
-    //    the zone once PER SINK; the decode-once foreachBatch variant
-    //    gates once and writes both sides from the cached batch. The
-    //    leg runs on a DEFLATE zone (what sinks actually land — decode
-    //    + inflate is the dominant cost there, unlike the null-codec
-    //    splits zone above); the delta between the two variants is one
-    //    full zone decode minus the staged-rename/persist overhead the
-    //    decode-once commit pays.
+    //    the zone once PER SINK. The leg runs on a DEFLATE zone (what
+    //    sinks actually land — decode + inflate is the dominant cost
+    //    there, unlike the null-codec splits zone above).
     def tmpd(p: String) = java.nio.file.Files.createTempDirectory(p).toString
     val zoneZ = "/root/repo/target/tmp/avro_stream_probe_zone_deflate"
     graft.sources.AvroIo.toAvro(
@@ -168,13 +164,6 @@ object AvroStreamProbe {
       try { qL.processAllAvailable(); qQ.processAllAvailable() }
       finally { qL.stop(); qQ.stop() }
     }
-    val promoteOnce = promoteLeg("lake promote (decode once)") { () =>
-      val q = graft.streaming.StreamingOps.streamingLakePromoteOnce(
-        graft.sources.AvroIo.readAvroStream(spark, zoneZ), rules,
-        tmpd("graft-probe-lake") + "/lake", tmpd("graft-probe-quar") + "/quar",
-        Seq("l_returnflag"), tmpd("graft-probe-ck"))
-      try q.processAllAvailable() finally q.stop()
-    }
 
     println(f"""{"metric":"avro_stream_probe","zone_mb":$zoneMb%.1f,""" +
       f""""files":$files,"batch_s":$batch%.2f,"drain_s":$oneBatch%.2f,""" +
@@ -183,8 +172,7 @@ object AvroStreamProbe {
       f""""steady_one_file_s":$steady%.2f,""" +
       f""""restart_compacted_s":$restartCompacted%.2f,""" +
       f""""restart_raw_s":$restartRaw%.2f,""" +
-      f""""promote_two_queries_s":$promoteTwo%.2f,""" +
-      f""""promote_decode_once_s":$promoteOnce%.2f}""")
+      f""""promote_two_queries_s":$promoteTwo%.2f}""")
     spark.stop()
   }
 }

@@ -2991,26 +2991,6 @@ object ExtQueries {
         .orderBy("n_nationkey")
     }),
 
-    // the decode-once promotion variant: identical dispositions to
-    // q_pipeline_lake_stream through ONE query and the staged-rename
-    // commit (its measured place vs the two-query default is in the
-    // StreamingOps scaladoc); rows read back from disk with provenance
-    // so the staged hive layout is physically validated
-    "q_pipeline_lake_once" -> ((s, dir) => {
-      avroLakeOnceFixture(s, dir)
-      val lake = PsIO.withProvenance(s.read.parquet(AvroLakeOnceDir))
-        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"),
-          col("n_len"), lit("lake").as("disposition"),
-          lit(null).cast("string").as("reason"),
-          regexp_extract(col("source_file"), "n_regionkey=([0-9]+)", 1)
-            .cast("int").as("part_reg"))
-      val quarantined = s.read.parquet(AvroLakeOnceQuarantineDir)
-        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"),
-          col("n_len"), lit("quarantine").as("disposition"), col("reason"),
-          lit(null).cast("int").as("part_reg"))
-      lake.unionByName(quarantined).orderBy("n_nationkey")
-    }),
-
     // versioned lake commits (table format lite): after an overwrite
     // superseded it, pinned v2 still reads as the FULL nation relation
     // (manifest time travel) while latest reads only the overwrite's
@@ -3263,8 +3243,6 @@ object ExtQueries {
   val AvroLakeVStreamDir = "/root/repo/target/tmp/nation_lake_vstream"
   val AvroLakeVStreamQuarantineDir =
     "/root/repo/target/tmp/nation_lake_vstream_quarantine"
-  val AvroLakeOnceDir = "/root/repo/target/tmp/nation_avro_lake_once"
-  val AvroLakeOnceQuarantineDir = "/root/repo/target/tmp/nation_avro_lake_once_q"
 
   /** Write-once-per-process fixture creation, keyed by (kind, dir):
     * the ingestion queries must time the READ — re-writing the fixture
@@ -3560,26 +3538,6 @@ object ExtQueries {
         .write.format("graft-avro")
         .mode("append").save(AvroDsv2WriteDir)
     })
-
-  /** The decode-once lake promotion run bounded once per process
-    * (q_pipeline_lake_once reads both sides back): same zone, same
-    * contract, same dispositions as q_pipeline_lake_stream — but one
-    * query gating each micro-batch once and committing both sides via
-    * the staged-rename protocol. */
-  private def avroLakeOnceFixture(s: SparkSession, dir: String): Unit = {
-    avroEvolvedFixture(s, dir)
-    fixturesDone.computeIfAbsent(s"avrolakeonce:$dir", _ => {
-      rmTree(AvroLakeOnceDir); rmTree(AvroLakeOnceQuarantineDir)
-      val ck = java.nio.file.Files
-        .createTempDirectory("graft-lake-once-ck").toString
-      val q = graft.streaming.StreamingOps.streamingLakePromoteOnce(
-        graft.sources.AvroIo.readAvroStream(s, AvroEvolvedFixtureDir),
-        Seq(graft.operators.Checks.NotNull("n_regionkey")),
-        AvroLakeOnceDir, AvroLakeOnceQuarantineDir,
-        Seq("n_regionkey"), ck)
-      try q.processAllAvailable() finally q.stop()
-    })
-  }
 
   /** Three versioned commits over one lake table once per process
     * (q_lake_versions reads two of them back): v1 overwrites with the
@@ -5958,22 +5916,6 @@ object ExtQueries {
          WHERE c_custkey BETWEEN (SELECT max(c_custkey)//3//4 FROM customer)
                              AND (SELECT max(c_custkey)//3//2 FROM customer)
          ORDER BY c_custkey""",
-    // the decode-once promotion shares the streaming pipeline's oracle:
-    // one-query gating + staged-rename commit must produce identical
-    // dispositions and layout
-    "q_pipeline_lake_once" ->
-      """WITH unified AS (
-           SELECT n_nationkey::BIGINT AS n_nationkey, n_name,
-                  CASE WHEN n_nationkey < 12 THEN n_regionkey END AS n_regionkey,
-                  CASE WHEN n_nationkey >= 12 THEN len(n_name)::INTEGER END AS n_len
-           FROM nation)
-         SELECT n_nationkey, n_name, n_regionkey, n_len,
-                CASE WHEN n_regionkey IS NOT NULL
-                     THEN 'lake' ELSE 'quarantine' END AS disposition,
-                CASE WHEN n_regionkey IS NULL
-                     THEN 'not_null_n_regionkey' END AS reason,
-                n_regionkey AS part_reg
-         FROM unified ORDER BY n_nationkey""",
     // the streaming promotion shares the batch pipeline's oracle:
     // micro-batch routing through two exactly-once file sinks must
     // produce the identical lake/quarantine dispositions and layout

@@ -97,8 +97,8 @@ object Registry {
     "pipeline compositions (§2.11)" -> Set(
       "q_pipeline", "q_pipeline_audit", "q_pipeline_curate",
       "q_pipeline_incr", "q_pipeline_lake", "q_pipeline_lake_stream",
-      "q_pipeline_lake_once", "q_pipeline_lake_vstream", "q_pipeline_media",
-      "q_pipeline_release", "q_pipeline_web"),
+      "q_pipeline_lake_vstream", "q_pipeline_media", "q_pipeline_release",
+      "q_pipeline_web"),
   )
 
   def familyOf(name: String): Option[String] =

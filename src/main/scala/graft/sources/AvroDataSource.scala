@@ -135,9 +135,8 @@ private[sources] final class AvroWriteBuilder(path: String, info: LogicalWriteIn
   }
 
   override def build(): Write = new Write {
-    // `df.write.format("graft-avro").mode("append"|"overwrite")` —
-    // same two-phase commit discipline as AvroIo.toAvro, symmetric
-    // with the read face
+    // `df.write.format("graft-avro").mode("append"|"overwrite")`, and
+    // AvroIo.toAvro, which is that overwrite
     override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
       new AvroBatchWrite(path, info.schema(), codecName, overwrite)
     // the STABLE streaming query id (persisted in the checkpoint, so
@@ -150,13 +149,16 @@ private[sources] final class AvroWriteBuilder(path: String, info: LogicalWriteIn
   }
 }
 
-/** Batch WRITE face (`df.write.format("graft-avro")`), closing the
-  * API asymmetry with the read path. Two-phase commit, the
-  * [[AvroIo.toAvro]] discipline re-expressed in the DSv2 protocol:
+/** Batch WRITE face (`df.write.format("graft-avro")`, and
+  * [[AvroIo.toAvro]], which is its overwrite): the one Avro batch
+  * writer. Two-phase commit — tasks never write final part files
+  * directly, since a mid-job failure or a speculative/retried attempt
+  * would otherwise leave a partial or mixed file set that readers
+  * cannot tell from complete output:
   *
   *  - every task attempt writes a dot-prefixed file (invisible to
-  *    [[AvroIo.readAvro]]'s listing) named by a fresh UUID — retried
-  *    and speculative attempts can never collide or mix;
+  *    [[AvroIo.readAvro]]'s listing) named by job, partition and task
+  *    — retried and speculative attempts can never collide or mix;
   *  - the engine delivers exactly ONE commit message per partition;
   *    the driver commit renames exactly those attempts to visible
   *    part names and aborted/orphaned attempts are swept or vacuumed;
@@ -169,10 +171,17 @@ private[sources] final class AvroWriteBuilder(path: String, info: LogicalWriteIn
   *    the job UUID, so repeated appends never collide — the
   *    landing-zone posture, a new writer-schema generation per append
   *    if the schema evolved);
-  *  - OVERWRITE stages everything in a job-unique temp dir and swaps
-  *    it in via [[AvroIo.jobCommitSwapFor]] — the previous generation
-  *    moves aside before the swap and every failure path leaves a
-  *    complete generation on disk, exactly like toAvro. */
+  *  - OVERWRITE stages everything in a job-unique `._tmp_` sibling dir,
+  *    parts named `part-<jobId>-p<N>.avro`, and swaps it in via
+  *    [[AvroIo.jobCommitSwap]] — the previous generation moves aside
+  *    before the swap, so the target is only ever the previous
+  *    generation or the complete new one;
+  *  - abort (the engine calls it when the job OR commit throws) deletes
+  *    the staged dir only when the job failed before commit started,
+  *    re-sweeping the tmp dirs killed stragglers recreate
+  *    ([[AvroIo.cleanupFailedWrite]]). Once commit has started the
+  *    staged dir holds the complete new generation and stays: the
+  *    commit exception names it. */
 private[sources] final class AvroBatchWrite(
     path: String, schema: StructType, codec: String, overwrite: Boolean)
     extends org.apache.spark.sql.connector.write.BatchWrite {
@@ -199,7 +208,12 @@ private[sources] final class AvroBatchWrite(
       codec, conf)
   }
 
+  // set when commit starts: from then on the staged overwrite dir is a
+  // complete generation that abort must keep
+  private var committing = false
+
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    committing = true
     val fs = writeDir.getFileSystem(conf.value)
     // append parts use the sink's GATED name shape: invisible to every
     // reader until this job's one epoch marker lands (atomic append);
@@ -215,7 +229,7 @@ private[sources] final class AvroBatchWrite(
           s"graft-avro batch write: commit rename failed: $src -> $dst")
       }
     if (overwrite)
-      AvroIo.jobCommitSwapFor(fs, writeDir, target, "graft-avro batch write")
+      AvroIo.jobCommitSwap(fs, writeDir, target, "graft-avro batch write")
     else {
       val marker = new HPath(
         new HPath(new HPath(writeDir, AvroIo.SinkCommitsDir), jobId), "0")
@@ -234,7 +248,9 @@ private[sources] final class AvroBatchWrite(
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val fs = writeDir.getFileSystem(conf.value)
-    if (overwrite) fs.delete(writeDir, true): Unit
+    if (overwrite)
+      AvroIo.cleanupFailedWrite(fs, writeDir, jobCompleted = committing,
+        jobStarted = true)
     else {
       messages.foreach {
         case m: AvroEpochFileMessage if m.attempt != null =>

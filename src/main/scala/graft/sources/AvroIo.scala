@@ -6,7 +6,7 @@ import org.apache.avro.{LogicalTypes, Schema}
 import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileStream, DataFileWriter, SeekableInput}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 
@@ -301,85 +301,21 @@ object AvroIo {
 
   // ------------------------------------------------------------- write
 
-  /** Write `df` as a directory of Avro container files, one per input
-    * partition, via the Hadoop FileSystem API. `codec`: None (null
-    * codec) or Some("deflate") — deflate is JDK-native; snappy would
-    * drag in platform natives the jar policy avoids.
-    *
-    * Two-phase commit (tasks must never write final part files
-    * directly — a mid-job failure or a speculative/retried attempt
-    * would otherwise leave a partial or mixed file set that readAvro
-    * cannot distinguish from complete output):
-    *  1. each task writes a dot-prefixed attempt file into a job-unique
-    *     temp dir and TASK-commits it by rename to its final part name
-    *     (Hadoop rename does not overwrite, so exactly one attempt wins
-    *     and losers delete their own file);
-    *  2. the driver JOB-commits by renaming the temp dir onto the
-    *     target after the job succeeds, and deletes the temp dir on
-    *     failure — the target is only ever absent or complete. */
+  /** Write `df` as a directory of Avro container files, one per
+    * non-empty partition: an overwrite through the `graft-avro` batch
+    * write, whose commit protocol ([[AvroBatchWrite]]) leaves the target
+    * either the previous generation or the complete new one. `codec`:
+    * None (null codec), Some("deflate") or Some("zstandard"); deflate is
+    * JDK-native, snappy would drag in platform natives the jar policy
+    * avoids. */
   def toAvro(df: DataFrame, path: String,
-             codec: Option[String] = Some("deflate")): Unit = {
-    val avroJson = toAvroSchema(df.schema, "row").toString
-    val codecName = codec.map(_.toLowerCase).getOrElse("null")
-    codecFor(codecName): Unit // validate driver-side, loudly
-    val sparkSchema = df.schema
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val target = new HPath(path)
-    val tmp = new HPath(
-      target.getParent,
-      s"._tmp_${target.getName}_${java.util.UUID.randomUUID().toString.take(8)}")
-    val fs0 = target.getFileSystem(conf.value)
-    fs0.mkdirs(tmp)
-    val tmpStr = tmp.toString
-    var jobCompleted = false
-    var jobStarted = false
-    try {
-      val taskCodec = codecName
-      val writeRdd = df.rdd.mapPartitionsWithIndex { (i, rows) =>
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val tc = org.apache.spark.TaskContext.get()
-          val attemptTag =
-            if (tc == null) "local" else tc.taskAttemptId().toString
-          val fs = new HPath(tmpStr).getFileSystem(conf.value)
-          // dot prefix: an orphaned attempt file (task died between
-          // create and rename) stays invisible to readAvro's filter
-          val attempt = new HPath(tmpStr, f".attempt-$attemptTag-part-$i%05d.avro")
-          // one shared task body with the streaming sink (schema parse,
-          // codec, per-field converters, record fill, stream lifecycle)
-          val w = new AvroRowFileWriter(sparkSchema, avroJson, attempt,
-            conf.value, taskCodec)
-          try rows.foreach(w.append) finally w.close()
-          // task-commit: HDFS/object-store rename refuses to overwrite,
-          // so under speculation/retry exactly one attempt publishes
-          // part-$i. A false return is a benign lost race ONLY when the
-          // winner's file exists — otherwise (src vanished, transient
-          // store failure) the partition's rows would silently go
-          // missing, so fail the task and let Spark retry it. (On the
-          // local fs rename CAN overwrite; harmless, both attempts
-          // carry identical rows.)
-          val committed = new HPath(tmpStr, f"part-$i%05d.avro")
-          if (!fs.rename(attempt, committed)) {
-            if (fs.exists(committed)) fs.delete(attempt, false): Unit
-            else throw new IllegalStateException(
-              s"AvroIo.toAvro: task-commit rename $attempt -> $committed " +
-                "failed with no committed winner")
-          }
-          Iterator.single(1)
-        }
-      }
-      jobStarted = true
-      writeRdd.count(): Unit
-      jobCompleted = true
-      jobCommitSwap(fs0, tmp, target, "AvroIo.toAvro")
-    } finally {
-      cleanupFailedWrite(fs0, tmp, jobCompleted, jobStarted)
-    }
-  }
+             codec: Option[String] = Some("deflate")): Unit =
+    df.write.format(classOf[AvroDataSource].getName)
+      .option(AvroDataSource.CodecOption, codec.getOrElse("null"))
+      .mode(SaveMode.Overwrite).save(path)
 
-  /** Job-commit by directory swap (shared by [[toAvro]] and
-    * [[compactAvro]]):
+  /** Job-commit by directory swap (shared by [[compactAvro]] and the
+    * `graft-avro` overwrite, [[AvroBatchWrite]]):
     *  - sweep orphaned dot-prefixed attempt files BEFORE the rename (a
     *    task that died between create and task-commit, or a
     *    speculative loser killed mid-write, leaves `.attempt-*`
@@ -395,13 +331,7 @@ object AvroIo {
     *    write as failed, but a silently surviving hidden ._old_ copy
     *    per rewrite is an unbounded disk leak — warn with the path so
     *    an operator can reclaim it. */
-  /** The DSv2 batch-write face (AvroBatchWrite) commits through the
-    * same swap. */
-  private[sources] def jobCommitSwapFor(
-      fs0: FileSystem, tmp: HPath, target: HPath, op: String): Unit =
-    jobCommitSwap(fs0, tmp, target, op)
-
-  private def jobCommitSwap(
+  private[sources] def jobCommitSwap(
       fs0: FileSystem, tmp: HPath, target: HPath, op: String): Unit = {
     fs0.listStatus(tmp).foreach { st =>
       if (st.getPath.getName.startsWith(".")) fs0.delete(st.getPath, false): Unit
@@ -447,8 +377,8 @@ object AvroIo {
     * `targetBytes`. One task per output file block-copies its inputs
     * via the container API's `appendAllFrom` (sync markers re-anchored
     * by the writer; compressed blocks pass through, recompress=false).
-    * Same two-phase commit as [[toAvro]]. Returns the output file
-    * count.
+    * Same job-commit swap as the `graft-avro` overwrite. Returns the
+    * output file count.
     *
     * What survives compaction: RECORDS (byte-faithful block copy), the
     * writer schema, and the codec. Custom per-file container metadata
@@ -561,7 +491,8 @@ object AvroIo {
     bins.size
   }
 
-  /** Failed-write temp cleanup (shared finally-block logic): only a
+  /** Failed-write temp cleanup ([[compactAvro]]'s finally block and
+    * the `graft-avro` overwrite's abort): only a
     * FAILED JOB's partial task output is garbage worth cleaning (the
     * previous generation still sits at target, untouched). After the
     * job completes, tmp is a complete copy: on successful commit it
@@ -579,7 +510,7 @@ object AvroIo {
     * delete, no sleeping. The sleep preserves the interrupt flag and
     * stops sweeping (job-cancel interrupts this thread; the original
     * exception must not be replaced). */
-  private def cleanupFailedWrite(
+  private[sources] def cleanupFailedWrite(
       fs0: FileSystem, tmp: HPath,
       jobCompleted: Boolean, jobStarted: Boolean): Unit = {
     if (!jobCompleted) {
@@ -613,10 +544,6 @@ object AvroIo {
     def close(): Unit = in.close()
   }
 
-  /** (path, length, mtime) of every data file under `path`,
-    * name-sorted. mtime rides along solely for the header-cache
-    * signature: a file REPLACED in place at the same length must not
-    * serve a stale cached schema. */
   /** The streaming sink's epoch-marker log directory (underscore
     * prefix: never listed as data) and the visible file-name shape it
     * commits. A sink-pattern file is DATA only once its (queryId,
@@ -667,6 +594,10 @@ object AvroIo {
       SinkCommits(hw.result(), markers.result())
     }
 
+  /** (path, length, mtime) of every data file under `path`,
+    * name-sorted. mtime rides along solely for the header-cache
+    * signature: a file REPLACED in place at the same length must not
+    * serve a stale cached schema. */
   private def listDataFiles(fs: FileSystem, path: String): Seq[(String, Long, Long)] = {
     val p = new HPath(path)
     val isDir = fs.getFileStatus(p).isDirectory
@@ -674,7 +605,7 @@ object AvroIo {
     val files = all.filter(s => s.isFile && s.getLen > 0 &&
         !s.getPath.getName.startsWith(".") &&
         !s.getPath.getName.startsWith("_"))
-    // marker gate for streaming-sink files; non-sink names (toAvro
+    // marker gate for streaming-sink files; non-sink names (overwrite
     // parts, foreign producers) are unconditionally visible
     val gated =
       if (!files.exists(s => SinkFileName.pattern.matcher(s.getPath.getName).matches))
@@ -755,16 +686,11 @@ object AvroIo {
     new graft.SessionCache[Seq[(String, Long, String, String)]]
 
   /** The Avro record-schema JSON for a Spark schema — the write-side
-    * mapping [[toAvro]] uses, exposed for the streaming sink
-    * (AvroStreamingWrite builds it once on the driver and ships the
-    * JSON). Fails loudly on unsupported Spark types. */
+    * mapping of both `graft-avro` write faces, built once on the driver
+    * and shipped as JSON. Fails loudly on unsupported Spark types. */
   private[sources] def avroJsonFor(schema: StructType): String =
     toAvroSchema(schema, "row").toString
 
-  /** One container file on the zone filesystem, appended row by row —
-    * the per-task body of the STREAMING sink. Same schema mapping and
-    * converters as [[toAvro]]'s task body; lifecycle (create/commit/
-    * abort paths) belongs to the caller. */
   /** Container codec for one canonical name. `zstandard` rides the
     * zstd-jni Spark already bundles for shuffle/parquet; presence-
     * gated so a slimmed deployment fails loudly at WRITE time (the
@@ -784,6 +710,10 @@ object AvroIo {
       s"AvroIo: unsupported codec '$other' (deflate|zstandard|none)")
   }
 
+  /** One container file on the zone filesystem, appended row by row —
+    * the per-task body of both `graft-avro` write faces (batch and
+    * streaming); lifecycle (create/commit/abort paths) belongs to the
+    * caller. */
   private[sources] final class AvroRowFileWriter(
       sparkSchema: StructType, avroJson: String, dest: HPath,
       conf: org.apache.hadoop.conf.Configuration, codec: String) {

@@ -41,7 +41,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
   *    cross-driver committers on a `LOCK` file taken with
   *    create-exclusive — atomic on HDFS/object stores, a documented
   *    microsecond check-then-create window on the raw local fs — and
-  *    a lock whose holder died is BROKEN after `lockStaleMs` (commits
+  *    a lock whose holder died is BROKEN after `LockStaleMs` (commits
   *    are driver-side metadata writes, orders of magnitude faster
   *    than any sane staleness margin; the data files were landed
   *    before the lock was taken).
@@ -78,6 +78,10 @@ object LakeVersions {
     * parallel jobs in one application); the fs LOCK file covers
     * cross-driver writers. */
   private val localCommitLock = new Object
+  /** How long a commit waits for the fs LOCK before failing, and the
+    * age past which a LOCK counts as its dead holder's and is broken. */
+  private val LockWaitMs = 60000L
+  private val LockStaleMs = 60000L
 
   private def versionsPath(lake: HPath) = new HPath(lake, VersionsDir)
   private def manifestPath(lake: HPath, v: Long) =
@@ -481,9 +485,10 @@ object LakeVersions {
     * ones; `overwrite=true`: only the new ones. Returns the committed
     * version number. The data files land BEFORE the lock is taken (the
     * slow, distributed part runs unlocked and unobservable); only the
-    * manifest write serializes. A LOCK older than `lockStaleMs` is
+    * manifest write serializes. A LOCK older than `LockStaleMs` is
     * broken (its holder died mid-commit; the next vacuum sweeps its
-    * unreferenced files).
+    * unreferenced files); a commit that cannot take the lock within
+    * `LockWaitMs` fails.
     *
     *  - `partitionBy`: hive-partition the commit's files; appends
     *    inherit the table's layout automatically and refuse a
@@ -506,10 +511,9 @@ object LakeVersions {
              partitionBy: Seq[String] = Nil,
              statsCols: Seq[String] = Nil,
              tag: String = "",
-             expectedLatest: Option[Long] = None,
-             lockWaitMs: Long = 60000, lockStaleMs: Long = 60000): Long =
+             expectedLatest: Option[Long] = None): Long =
     commitCore(spark, dir, df, overwrite, partitionBy, statsCols, tag,
-      expectedLatest, lockWaitMs, lockStaleMs, carryFiles = None)
+      expectedLatest, carryFiles = None)
 
   /** [[commit]] plus REWRITE-BY-REFERENCE: the new manifest names
     * `carryFiles` (entries pinned from the version `expectedLatest`
@@ -521,11 +525,9 @@ object LakeVersions {
   private[graft] def commitCarried(
       spark: SparkSession, dir: String, df: DataFrame,
       carryFiles: Seq[FileEntry], partitionBy: Seq[String],
-      statsCols: Seq[String], tag: String, expectedLatest: Long,
-      lockWaitMs: Long = 60000, lockStaleMs: Long = 60000): Long =
+      statsCols: Seq[String], tag: String, expectedLatest: Long): Long =
     commitCore(spark, dir, df, overwrite = true, partitionBy, statsCols,
-      tag, Some(expectedLatest), lockWaitMs, lockStaleMs,
-      carryFiles = Some(carryFiles))
+      tag, Some(expectedLatest), carryFiles = Some(carryFiles))
 
   private def commitCore(spark: SparkSession, dir: String, df: DataFrame,
              overwrite: Boolean,
@@ -533,7 +535,6 @@ object LakeVersions {
              statsCols: Seq[String],
              tag: String,
              expectedLatest: Option[Long],
-             lockWaitMs: Long, lockStaleMs: Long,
              carryFiles: Option[Seq[FileEntry]]): Long = {
     require(!tag.contains("\t") && !tag.contains("\n"),
       "LakeVersions.commit: tag must not contain tabs/newlines")
@@ -592,7 +593,7 @@ object LakeVersions {
     // NARROWER than its files' union (v2 recorded the last commit's
     // frame schema) — recover the true union HERE, unlocked (one
     // mergeSchema footer job; running it under the lock could exceed
-    // lockStaleMs and get our own lock broken mid-critical-section),
+    // LockStaleMs and get our own lock broken mid-critical-section),
     // and gate against it, so pre-land and under-lock validate the
     // SAME schema and a gated-through append cannot fail forever
     // under the lock.
@@ -668,7 +669,7 @@ object LakeVersions {
       } finally statsPool.foreach(_.shutdownNow())
     localCommitLock.synchronized {
       val lock = new HPath(versionsPath(lake), "LOCK")
-      val deadline = System.currentTimeMillis() + lockWaitMs
+      val deadline = System.currentTimeMillis() + LockWaitMs
       var held = false
       while (!held) {
         held =
@@ -686,7 +687,7 @@ object LakeVersions {
                    catch { case _: java.io.FileNotFoundException => None }
           st match {
             case Some(x) if x.getModificationTime <
-                System.currentTimeMillis() - lockStaleMs =>
+                System.currentTimeMillis() - LockStaleMs =>
               // break a dead holder's lock — but re-stat first and only
               // delete the EXACT file observed stale, so two breakers
               // racing cannot take out each other's fresh lock
@@ -698,7 +699,7 @@ object LakeVersions {
             case _ =>
               if (System.currentTimeMillis() > deadline)
                 throw new IllegalStateException(
-                  s"LakeVersions.commit: could not take $lock within ${lockWaitMs} ms")
+                  s"LakeVersions.commit: could not take $lock within $LockWaitMs ms")
               Thread.sleep(50)
           }
         }

@@ -641,11 +641,6 @@ object StreamingOps {
         OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
-  /** Batch sessionization via analytic windows (the shuffle-once,
-    * state-store-free form for historical reprocessing): a session break
-    * is a gap > `gapMinutes` from the previous event of the same user; the
-    * running count of breaks numbers the sessions. One shuffle on user_id;
-    * both window functions share the same sort. */
   /** The CONTINUOUS form of the avro→lake promotion (q_pipeline_lake's
     * batch composition): gate a streaming landing-zone frame on the
     * lake contract and route each micro-batch's rows — passing rows
@@ -658,10 +653,11 @@ object StreamingOps {
     * commit log), so a retried micro-batch never double-appends. The
     * price is that the zone is read once per side; the gate is a
     * stateless projection, so the cost is two decodes of each new file
-    * — the alternative (one query, foreachBatch writing both sides) is
-    * at-least-once on batch retry, the wrong default for a lake.
-    * Callers with decode-bound zones can pre-promote to a single
-    * intermediate stream instead.
+    * — a plain foreachBatch writing both sides would be at-least-once
+    * on batch retry, the wrong default for a lake. Callers with
+    * decode-bound zones use [[streamingLakePromoteVersioned]], which
+    * decodes once per batch and commits each side as a tag-idempotent
+    * lake version.
     *
     * Returns the two running queries (lake, quarantine); stop both to
     * end the promotion. Checkpoints live under
@@ -709,74 +705,6 @@ object StreamingOps {
     (good, bad)
   }
 
-  /** Decode-once lake promotion: ONE streaming query gates each
-    * micro-batch and writes BOTH sides from the cached result — the
-    * zone decodes once per batch, where [[streamingLakePromote]]'s two
-    * independent queries decode it twice (the documented cost of its
-    * two exactly-once file sinks). Exactly-once here comes from a
-    * staged-rename commit per (side, batch):
-    *
-    *  - each side's batch output writes to a DETERMINISTIC staging dir
-    *    (`_graft_staging/<ns>-<batch>`), then its files move into the
-    *    target under batch-prefixed names (`b<ns>-<batch>-...`,
-    *    partition subpaths preserved), then a batch marker lands
-    *    tmp-then-rename under `_graft_batches/<ns>/`;
-    *  - a replay whose marker exists skips the side wholesale; a
-    *    replay after a crash first deletes the batch's prefixed files
-    *    and staging leftovers, so exactly one attempt's files survive;
-    *  - `ns` is derived from the checkpoint root, so a FRESH
-    *    checkpoint (whose batch ordinals restart at 0) can never be
-    *    fooled by an old query's markers.
-    *
-    * Tradeoffs vs the two-query variant, measured (AvroStreamProbe leg
-    * 5, deflate zone): saving the second decode does NOT pay at
-    * ordinary zone scales — the per-batch persist (the single decode
-    * must be materialized to feed two sinks) plus the staged-rename
-    * commit cost MORE than the decode it saves (2.9 s vs 1.7 s on a
-    * 180 MB deflate backlog), and the parquet streaming sink's
-    * `_spark_metadata` read gating is lost (a crashed attempt's files
-    * are visible here until the replay sweeps them). Default to
-    * [[streamingLakePromote]]; reach for this only when decode
-    * dominates everything (very wide schemas, heavy compression,
-    * expensive conflict stringification) — the dispositions are
-    * identical either way (differential-pinned in AvroStreamSpec). */
-  def streamingLakePromoteOnce(
-      zone: DataFrame, rules: Seq[graft.operators.Checks.Rule],
-      lakeDir: String, quarantineDir: String,
-      partitionCols: Seq[String], checkpointRoot: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(zone.isStreaming, "streamingLakePromoteOnce: zone must be a streaming frame")
-    require(rules.nonEmpty, "streamingLakePromoteOnce: at least one contract rule")
-    // stable across restarts of THIS query, distinct for any fresh
-    // checkpoint — the marker namespace (see scaladoc)
-    val ns = {
-      val crc = new java.util.zip.CRC32C()
-      crc.update(checkpointRoot.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.lang.Long.toHexString(crc.getValue)
-    }
-    // a replay is only possible for the FIRST batch this query
-    // instance processes (the engine restores at most one uncommitted
-    // batch on restart) — later batches are fresh by construction, so
-    // only the first pays the crash-sweep listing of the target dirs
-    val firstBatch = new java.util.concurrent.atomic.AtomicBoolean(true)
-    zone.writeStream
-      .option("checkpointLocation", s"$checkpointRoot/promote")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // the persist pins the single decode BOTH routed sides read;
-        // gateAndRoute keeps the dispositions identical to the
-        // two-query variant by construction
-        val pinned = batch.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (good, bad) = gateAndRoute(pinned, rules)
-          val sweep = firstBatch.getAndSet(false)
-          commitBatchSide(lakeDir, ns, id, good, partitionCols, sweep)
-          commitBatchSide(quarantineDir, ns, id, bad, Nil, sweep)
-        } finally pinned.unpersist(): Unit
-      }
-      .start()
-  }
-
   /** VERSIONED lake promotion: the same gate-and-route as
     * [[streamingLakePromote]], but each side commits every micro-batch
     * as one [[graft.sources.LakeVersions]] version — an atomic
@@ -786,9 +714,7 @@ object StreamingOps {
     *  - the promoted corpus gets TIME TRAVEL and the snapshotDiff
     *    audit per epoch (version N == the lake after micro-batch N);
     *  - a crash between data-land and manifest publish is invisible —
-    *    readers keep the previous version (the sink variants expose a
-    *    torn batch until the replay sweeps it, per the
-    *    streamingLakePromoteOnce scaladoc);
+    *    readers keep the previous version;
     *  - per-file footer stats (`statsCols`) ride into the manifest at
     *    commit time, so pinned reads file-prune for free;
     *  - batch and streaming promotions land in the SAME table format —
@@ -873,65 +799,11 @@ object StreamingOps {
     }
   }
 
-  /** One side's idempotent staged-rename commit (see
-    * [[streamingLakePromoteOnce]]). `sweepReplay` gates the recursive
-    * crash-replay listing — needed only for a query instance's first
-    * batch; paying it every trigger would grow per-batch commit cost
-    * with lake history. */
-  private def commitBatchSide(dir: String, ns: String, id: Long,
-      df: DataFrame, partitionCols: Seq[String], sweepReplay: Boolean): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val target = new HPath(dir)
-    val fs = target.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val markerDir = new HPath(new HPath(target, "_graft_batches"), ns)
-    val marker = new HPath(markerDir, id.toString)
-    if (fs.exists(marker)) return // post-commit replay
-    val prefix = s"b$ns-$id-"
-    // crash replay: exactly one attempt's files may survive — sweep
-    // this batch's prefixed files before redoing the move
-    if (sweepReplay && fs.exists(target)) {
-      val it = fs.listFiles(target, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.startsWith(prefix))
-          fs.delete(st.getPath, false): Unit
-      }
-    }
-    val staging = new HPath(new HPath(target, "_graft_staging"), s"$ns-$id")
-    fs.delete(staging, true): Unit
-    var w = df.write.mode("overwrite")
-    if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
-    w.parquet(staging.toString)
-    // move data files into place, partition subpaths preserved,
-    // names batch-prefixed so the sweep above is exact (qualified:
-    // listFiles returns absolute paths even for a relative target)
-    val stagedRoot = fs.makeQualified(staging).toUri.getPath
-    val it = fs.listFiles(staging, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if (st.isFile && !name.startsWith(".") && !name.startsWith("_")) {
-        val rel = st.getPath.toUri.getPath.stripPrefix(stagedRoot)
-          .stripPrefix("/")
-        val relDir = rel.lastIndexOf('/') match {
-          case -1 => ""
-          case i  => rel.substring(0, i + 1)
-        }
-        val dest = new HPath(target, relDir + prefix + name)
-        fs.mkdirs(dest.getParent)
-        require(fs.rename(st.getPath, dest),
-          s"streamingLakePromoteOnce: commit rename failed: ${st.getPath} -> $dest")
-      }
-    }
-    fs.mkdirs(markerDir)
-    val tmpMarker = new HPath(markerDir, s".$id.tmp")
-    fs.create(tmpMarker, true).close()
-    require(fs.rename(tmpMarker, marker) || fs.exists(marker),
-      s"streamingLakePromoteOnce: marker commit failed for batch $id")
-    fs.delete(staging, true): Unit
-  }
-
+  /** Batch sessionization via analytic windows (the shuffle-once,
+    * state-store-free form for historical reprocessing): a session break
+    * is a gap > `gapMinutes` from the previous event of the same user; the
+    * running count of breaks numbers the sessions. One shuffle on user_id;
+    * both window functions share the same sort. */
   def sessionizeBatch(events: DataFrame, gapMinutes: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // millisecond integer arithmetic end-to-end: deterministic and

@@ -157,16 +157,13 @@ class AvroIoSpec extends AnyFunSuite with SparkFixture {
     val s = spark
     import s.implicits._
     val df = Seq((1, 10L, "a"), (2, 20L, "b"), (3, 30L, "c")).toDF("i", "l", "t")
-    val viaApi = tmp(); val viaFormat = tmp()
-    AvroIo.toAvro(df, viaApi)
-    // the write.format face must be exchangeable with AvroIo.toAvro:
-    // same rows, same schema, same unified read
+    val viaFormat = tmp()
+    // AvroIo.toAvro is this overwrite
     df.write.format("graft-avro").mode("overwrite").save(viaFormat)
     def canon(dir: String) = AvroIo.readAvro(s, dir).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getString(2))).sortBy(_._1).toSeq
-    assert(canon(viaFormat) == canon(viaApi))
-    assert(AvroIo.readAvro(s, viaFormat).schema == AvroIo.readAvro(s, viaApi).schema)
-    // overwrite replaces wholesale (the toAvro swap discipline)
+    assert(canon(viaFormat) == Seq((1, 10L, "a"), (2, 20L, "b"), (3, 30L, "c")))
+    // overwrite replaces wholesale (the directory swap)
     Seq((9, 90L, "z")).toDF("i", "l", "t")
       .write.format("graft-avro").mode("overwrite").save(viaFormat)
     assert(canon(viaFormat) == Seq((9, 90L, "z")))
@@ -202,6 +199,32 @@ class AvroIoSpec extends AnyFunSuite with SparkFixture {
     }
     assert(canon(viaFormat) == Seq((9, 90L, "z")),
       "an unmarked (torn) append must be invisible to readers")
+  }
+
+  test("a failed overwrite swap keeps the staged generation; the target keeps the previous one") {
+    val s = spark
+    import s.implicits._
+    s.sparkContext.hadoopConfiguration.set("fs.failswap.impl",
+      classOf[FailingSwapFileSystem].getName)
+    val base = Files.createTempDirectory("graft-avro-swap")
+    val dir = base.toString + "/t"
+    Seq(1, 2).toDF("n").write.format("graft-avro").mode("overwrite").save(dir)
+    // the same directory through a filesystem whose staged-dir rename
+    // fails: the job completes, then the job-commit swap fails
+    val e = intercept[Exception] {
+      (10 to 14).toDF("n").repartition(2)
+        .write.format("graft-avro").mode("overwrite").save(s"failswap://$dir")
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    val staged = base.toFile.listFiles().filter(_.getName.startsWith("._tmp_t_"))
+    assert(staged.length == 1,
+      s"staged dir gone: ${base.toFile.listFiles().map(_.getName).toSeq}")
+    assert(msgs.contains(staged.head.getName), msgs)
+    assert(AvroIo.readAvro(s, staged.head.getPath).collect().map(_.getInt(0))
+      .sorted.toSeq == (10 to 14))
+    assert(AvroIo.readAvro(s, dir).collect().map(_.getInt(0)).sorted.toSeq ==
+      Seq(1, 2))
   }
 
   test("DSv2 face: named scan in the plan, select prunes the reader schema") {

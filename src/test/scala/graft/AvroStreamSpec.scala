@@ -187,9 +187,10 @@ class AvroStreamSpec extends AnyFunSuite with SparkFixture {
     assert(batchFlagged.filter(!col("row_bad")).count() == 3L)
   }
 
-  test("streamingLakePromoteOnce: one decode, dispositions == the two-query variant") {
+  test("streamingLakePromoteVersioned: one decode, dispositions == the two-query variant") {
     val s = spark
     import graft.operators.Checks
+    import graft.sources.LakeVersions
     val zone = Files.createTempDirectory("graft-avro-zone").toString
     val lake = Files.createTempDirectory("graft-lake").toString + "/lake"
     val quar = Files.createTempDirectory("graft-lake").toString + "/quar"
@@ -198,7 +199,7 @@ class AvroStreamSpec extends AnyFunSuite with SparkFixture {
     // that BOTH variants produce identical dispositions and layout
     landFile(gen1(s, Seq((1, "a"), (2, "b"))), zone, "g1-0.avro")
     landFile(gen2(s, Seq((100L, "c", 7), (101L, "d", 7))), zone, "g2-0.avro")
-    def start() = graft.streaming.StreamingOps.streamingLakePromoteOnce(
+    def start() = graft.streaming.StreamingOps.streamingLakePromoteVersioned(
       AvroIo.readAvroStream(s, zone), Seq(Checks.NotNull("x")),
       lake, quar, Seq("x"), ck)
     var q = start()
@@ -208,34 +209,34 @@ class AvroStreamSpec extends AnyFunSuite with SparkFixture {
       landFile(gen2(s, Seq((200L, "f", 9))), zone, "g2-1.avro")
       q.processAllAvailable()
       // restart on the same checkpoint: committed batches must not
-      // duplicate through the staged-rename commit
+      // duplicate through the tag-idempotent version commits
       q.stop()
       q = start()
       q.processAllAvailable()
       landFile(gen2(s, Seq((300L, "g", 9))), zone, "g2-2.avro")
       q.processAllAvailable()
     } finally stopStream(q)
-    val lakeRows = s.read.parquet(lake)
+    val lakeRows = LakeVersions.read(s, lake)
     assert(lakeRows.collect().map(_.getAs[Long]("n")).sorted.toSeq ==
       Seq(100L, 101L, 200L, 300L))
-    // hive layout preserved through the staged move
+    // hive layout: each version's files land under x=<val> dirs
     val dirs = new java.io.File(lake).listFiles().filter(_.isDirectory)
       .map(_.getName).filterNot(_.startsWith("_")).sorted.toSeq
     assert(dirs == Seq("x=7", "x=9"), s"hive layout missing: $dirs")
-    val quarRows = s.read.parquet(quar).collect()
+    val quarRows = LakeVersions.read(s, quar).collect()
     assert(quarRows.map(_.getAs[Long]("n")).sorted.toSeq == Seq(1L, 2L, 3L))
     assert(quarRows.forall(_.getAs[String]("reason") == "not_null_x"))
     // a FRESH checkpoint re-promoting into fresh dirs cannot be fooled
-    // by the old namespace's markers (ns derives from the checkpoint)
+    // by the old namespace's tags (ns derives from the checkpoint)
     val lake2 = Files.createTempDirectory("graft-lake").toString + "/lake2"
     val quar2 = Files.createTempDirectory("graft-lake").toString + "/quar2"
-    val q2 = graft.streaming.StreamingOps.streamingLakePromoteOnce(
+    val q2 = graft.streaming.StreamingOps.streamingLakePromoteVersioned(
       AvroIo.readAvroStream(s, zone), Seq(Checks.NotNull("x")),
       lake2, quar2, Seq("x"),
       Files.createTempDirectory("graft-lake-ck2").toString)
     try q2.processAllAvailable() finally stopStream(q2)
-    assert(s.read.parquet(lake2).count() == 4L)
-    assert(s.read.parquet(quar2).count() == 3L)
+    assert(LakeVersions.read(s, lake2).count() == 4L)
+    assert(LakeVersions.read(s, quar2).count() == 3L)
   }
 
   test("streaming sink: epochs land as deterministic container files, readAvro round-trips") {

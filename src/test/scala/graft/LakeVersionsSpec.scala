@@ -77,7 +77,7 @@ class LakeVersionsSpec extends AnyFunSuite with SparkFixture {
     val dir = lake()
     LakeVersions.commit(s, dir, Seq((1, "a")).toDF("k", "t"))
     // a writer that died holding the lock: the next commit breaks it
-    // once it is older than lockStaleMs instead of waiting forever
+    // once it is older than LockStaleMs (60 s) instead of waiting forever
     val claims = new java.io.File(dir, "_graft_versions")
     val dead = new java.io.File(claims, "LOCK")
     assert(dead.createNewFile())

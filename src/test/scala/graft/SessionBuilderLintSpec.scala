@@ -1,30 +1,52 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every main builds its session through [[Session.local]]: a hand-rolled
-  * `SparkSession.builder()` registers neither graft's plan rules
-  * (`GraftExtensions`) nor the codegen class-cache cap, so what it
-  * measures is not the engine. Reads the sources by path relative to the
-  * build root. */
+/** Source lints over `src/main/scala`, read by path relative to the build
+  * root:
+  *  - every main builds its session through [[Session.local]]: a
+  *    hand-rolled `SparkSession.builder()` registers neither graft's plan
+  *    rules (`GraftExtensions`) nor the codegen class-cache cap, so what
+  *    it measures is not the engine;
+  *  - file-commit protocols (attempt renames, directory swaps, commit
+  *    markers) live in `graft.sources`: a Hadoop `FileSystem.rename`
+  *    anywhere else is one more hand-rolled protocol that every crash
+  *    test would have to cover. */
 class SessionBuilderLintSpec extends AnyFunSuite {
 
-  test("SparkSession.builder() appears only in Session.scala") {
+  private lazy val sources: List[Path] = {
     val root = Paths.get("src/main/scala")
-    val sources = Using.resource(Files.walk(root))(
+    val all = Using.resource(Files.walk(root))(
       _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
-    assert(sources.nonEmpty, s"no sources under $root")
-    val hits = for {
+    assert(all.nonEmpty, s"no sources under $root")
+    all
+  }
+
+  /** `path:line` of every line of a source outside `exempt` that `hit`s. */
+  private def hits(exempt: Path => Boolean, hit: String => Boolean): List[String] =
+    for {
       p <- sources
-      if p.getFileName.toString != "Session.scala"
-      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      if line.contains("SparkSession.builder()")
+      if !exempt(p)
+      (line, i) <- Files.readAllLines(p).asScala.toList.zipWithIndex
+      if hit(line)
     } yield s"$p:${i + 1}"
-    assert(hits.isEmpty, "hand-rolled session builders; use Session.local")
+
+  test("SparkSession.builder() appears only in Session.scala") {
+    val found = hits(_.getFileName.toString == "Session.scala",
+      _.contains("SparkSession.builder()"))
+    assert(found.isEmpty, "hand-rolled session builders; use Session.local")
+  }
+
+  test("a Hadoop FileSystem.rename appears only under graft/sources") {
+    val rename = """\b(fs|fs0|logFs)\.rename\(""".r
+    val found = hits(_.startsWith(Paths.get("src/main/scala/graft/sources")),
+      rename.findFirstIn(_).isDefined)
+    assert(found.isEmpty,
+      s"file renames outside graft.sources: ${found.mkString(", ")}")
   }
 }
