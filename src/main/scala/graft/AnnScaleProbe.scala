@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.sources.PsIO
 
 /** ×N scale probe for the similarity/ANN family (round-11; the round-10
   * probe covered only the text-dedup family). Runs every ANN path at ×1
@@ -29,7 +30,7 @@ object AnnScaleProbe {
     val dup = if (args.length > 1) args(1).toInt else 10
     val spark = Session.local(32, "graft-ann-scale-probe")
 
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = PsIO.parquet(spark, s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
 

@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.PsIO
+
 /** Avro compaction scale probe: what does zero-decode block copy buy
   * over the naive decode-rewrite on the many-small-files layout a
   * Kafka-connect sink leaves behind?
@@ -28,7 +30,7 @@ object AvroCompactProbe {
     // probe measures decode/copy mechanics, not inflate)
     val rep = sys.env.getOrElse("SPARK_GRAFT_AVRO_PROBE_REP", "4").toInt
     val files = sys.env.getOrElse("SPARK_GRAFT_AVRO_PROBE_FILES", "64").toInt
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = PsIO.parquet(spark, s"$sfDir/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
         "l_returnflag", "l_shipdate")
     graft.sources.AvroIo.toAvro(

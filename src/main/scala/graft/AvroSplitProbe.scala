@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.sources.PsIO
 
 /** Avro read-path scale probe: measures what the round-15 read
   * machinery actually buys on a single FAT container file — the layout
@@ -29,7 +30,7 @@ object AvroSplitProbe {
     // times (null codec: the probe measures decode + split mechanics,
     // not inflate). rep=6 -> ~3.6M rows, ~450 MB raw Avro.
     val rep = sys.env.getOrElse("SPARK_GRAFT_AVRO_PROBE_REP", "6").toInt
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = PsIO.parquet(spark, s"$sfDir/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
         "l_returnflag", "l_shipdate")
     graft.sources.AvroIo.toAvro(

@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.PsIO
+
 /** Streaming Avro source scale probe: what does the micro-batch face
   * cost over the one-shot batch read, and how does admission control
   * shape a backlogged zone's drain?
@@ -32,7 +34,7 @@ object AvroStreamProbe {
     val zone = "/root/repo/target/tmp/avro_stream_probe_zone"
     val rep = sys.env.getOrElse("SPARK_GRAFT_AVRO_PROBE_REP", "4").toInt
     val files = sys.env.getOrElse("SPARK_GRAFT_AVRO_PROBE_FILES", "128").toInt
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = PsIO.parquet(spark, s"$sfDir/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
         "l_returnflag", "l_shipdate")
     graft.sources.AvroIo.toAvro(

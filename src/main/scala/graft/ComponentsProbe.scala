@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, Dedup}
+import graft.sources.PsIO
 
 /** Connected-components scale probe (SCALEPROBE.md round-7 section):
   * (1) the real path — minhash pairs on the ×`dup` duplicated corpus →
@@ -26,7 +27,7 @@ object ComponentsProbe {
     }
 
     // ---- real path: duplicated corpus -> pairs -> clusters -------------
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = PsIO.parquet(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     val docs = (0 until dup).map { i =>
       base.select((col("doc_id") * dup + i).as("doc_id"), col("text"))

@@ -24,7 +24,7 @@ object CurationScaleProbe {
     val dup = if (args.length > 1) args(1).toInt else 10
     val spark = Session.local(32, "graft-curation-scale-probe")
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = PsIO.parquet(spark, s"$sfDir/documents.parquet")
 
     def corpusAt(f: Int): DataFrame =
       (0 until f).map { i =>

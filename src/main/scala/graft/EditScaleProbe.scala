@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.sources.PsIO
 
 /** x10 scale probe for [[Dedup.editDistancePairs]] (round 11).
   *
@@ -28,7 +29,7 @@ object EditScaleProbe {
     val dup = if (args.length > 1) args(1).toInt else 10
     val spark = Session.local(32, "graft-edit-scale-probe")
 
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = PsIO.parquet(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "source", "lang")
 
     def titles(factor: Int) = (0 until factor).map { i =>

@@ -701,8 +701,8 @@ object ExtQueries {
     // join and the oracle restates it as one. Integer aggregates keep
     // the hash comparison bit-exact.
     "q_bloom_join" -> ((s, dir) => {
-      val orders = s.read.parquet(s"$dir/orders.parquet")
-      val sel = s.read.parquet(s"$dir/customer.parquet")
+      val orders = PsIO.parquet(s, s"$dir/orders.parquet")
+      val sel = PsIO.parquet(s, s"$dir/customer.parquet")
         .filter(col("c_mktsegment") === "BUILDING" && col("c_acctbal") > 5000)
       val bf = bloomFilterFor(s"$dir/bloom_building5000", sel, "c_custkey")
       val pruned = orders.filter(
@@ -846,8 +846,8 @@ object ExtQueries {
     // equi conjunct and a numeric range, of which the query set has
     // exactly this one.
     "q_range_join" -> ((s, dir) => {
-      s.read.parquet(s"$dir/orders.parquet").createOrReplaceTempView("graft_rj_orders")
-      s.read.parquet(s"$dir/part.parquet").createOrReplaceTempView("graft_rj_part")
+      PsIO.parquet(s, s"$dir/orders.parquet").createOrReplaceTempView("graft_rj_orders")
+      PsIO.parquet(s, s"$dir/part.parquet").createOrReplaceTempView("graft_rj_part")
       s.conf.set(graft.plans.RangeJoinRule.BinSizeKey, "20000")
       s.sql("""
         SELECT o.o_orderkey, i.i_id
@@ -873,7 +873,7 @@ object ExtQueries {
     // re-states the dot product as explicit arithmetic with the SAME
     // left-to-right accumulation order, so doubles stay bit-identical
     "q_sql_vector" -> ((s, dir) => {
-      s.read.parquet(s"$dir/lineitem.parquet")
+      PsIO.parquet(s, s"$dir/lineitem.parquet")
         .createOrReplaceTempView("graft_sqlfn_lineitem")
       s.sql("""
         SELECT l_orderkey, l_linenumber,
@@ -2155,7 +2155,7 @@ object ExtQueries {
     // list of diverged files
     "q_file_manifest" -> ((s, dir) => {
       manifestFixture(s, dir)
-      PsIO.fileManifest(s.read.parquet(ManifestFixtureDir),
+      PsIO.fileManifest(PsIO.parquet(s, ManifestFixtureDir),
           Seq("doc_id", "text", "lang", "source", "n_chars"))
         .orderBy("file")
     }),
@@ -2907,7 +2907,7 @@ object ExtQueries {
           lit(null).cast("string").as("reason"),
           regexp_extract(col("source_file"), "n_regionkey=([0-9]+)", 1)
             .cast("int").as("part_reg"))
-      val quarantined = s.read.parquet(AvroLakeQuarantineDir)
+      val quarantined = PsIO.parquet(s, AvroLakeQuarantineDir)
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"),
           col("n_len"), lit("quarantine").as("disposition"), col("reason"),
           lit(null).cast("int").as("part_reg"))
@@ -2921,7 +2921,7 @@ object ExtQueries {
     // oracle as the batch evolved read pins streaming == batch == DuckDB
     "q_stream_avro" -> ((s, dir) => {
       avroStreamFixture(s, dir)
-      s.read.parquet(AvroStreamSinkDir).orderBy("n_nationkey")
+      PsIO.parquet(s, AvroStreamSinkDir).orderBy("n_nationkey")
     }),
 
     // the exactly-once streaming SINK plus zone maintenance: nation
@@ -2943,13 +2943,13 @@ object ExtQueries {
     // physically exists and matches the batch pipeline's oracle
     "q_pipeline_lake_stream" -> ((s, dir) => {
       avroLakeStreamFixture(s, dir)
-      val lake = PsIO.withProvenance(s.read.parquet(AvroLakeStreamDir))
+      val lake = PsIO.withProvenance(PsIO.parquet(s, AvroLakeStreamDir))
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"),
           col("n_len"), lit("lake").as("disposition"),
           lit(null).cast("string").as("reason"),
           regexp_extract(col("source_file"), "n_regionkey=([0-9]+)", 1)
             .cast("int").as("part_reg"))
-      val quarantined = s.read.parquet(AvroLakeStreamQuarantineDir)
+      val quarantined = PsIO.parquet(s, AvroLakeStreamQuarantineDir)
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"),
           col("n_len"), lit("quarantine").as("disposition"), col("reason"),
           lit(null).cast("int").as("part_reg"))
@@ -3141,7 +3141,7 @@ object ExtQueries {
     // the consumed (from, to) version windows ride into the relation
     "q_lake_consume" -> ((s, dir) => {
       val ((f1, t1), (f2, t2)) = lakeConsumeFixture(s, dir)
-      s.read.parquet(LakeConsumeDir + "_target")
+      PsIO.parquet(s, LakeConsumeDir + "_target")
         .select(col("c_custkey"), col("c_name"),
           lit(f1.toInt).as("boot_from"), lit(t1.toInt).as("boot_to"),
           lit(f2.toInt).as("incr_from"), lit(t2.toInt).as("incr_to"))
@@ -3252,15 +3252,15 @@ object ExtQueries {
     new java.util.concurrent.ConcurrentHashMap[String, Unit]()
   private def csvFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"csv:$dir", _ =>
-      PsIO.toCsv(s.read.parquet(s"$dir/nation.parquet").coalesce(1), CsvFixtureDir))
+      PsIO.toCsv(PsIO.parquet(s, s"$dir/nation.parquet").coalesce(1), CsvFixtureDir))
   private def jsonFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"json:$dir", _ =>
-      PsIO.toJson(s.read.parquet(s"$dir/nation.parquet").coalesce(1), JsonFixtureDir))
+      PsIO.toJson(PsIO.parquet(s, s"$dir/nation.parquet").coalesce(1), JsonFixtureDir))
   private def arrowFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"arrow:$dir", _ => {
       new java.io.File(ArrowFixturePath).getParentFile.mkdirs()
       PsIO.toArrow(
-        s.read.parquet(s"$dir/nation.parquet").orderBy("n_nationkey"),
+        PsIO.parquet(s, s"$dir/nation.parquet").orderBy("n_nationkey"),
         ArrowFixturePath)
     })
   /** Two drifted generations of the nation feed (disjoint key ranges so
@@ -3271,7 +3271,7 @@ object ExtQueries {
     * evolved reader must handle. */
   private def driftFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"drift:$dir", _ => {
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = PsIO.parquet(s, s"$dir/nation.parquet")
       n.select(col("n_nationkey"), col("n_name"), col("n_regionkey"),
           (col("n_nationkey") * 2).cast("int").as("quality"),
           concat(lit("m"), col("n_nationkey")).as("meta"))
@@ -3287,7 +3287,7 @@ object ExtQueries {
   private def jsonDirtyFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"jsond:$dir", _ => {
       new java.io.File(JsonDirtyFixtureDir).mkdirs()
-      val lines = s.read.parquet(s"$dir/nation.parquet")
+      val lines = PsIO.parquet(s, s"$dir/nation.parquet")
         .orderBy("n_nationkey").toJSON.collect()
       // two malformed lines planted mid-file and at the tail — the
       // shapes crawls actually produce (truncated object, stray text)
@@ -3300,7 +3300,7 @@ object ExtQueries {
   private def csvDirtyFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"csvd:$dir", _ => {
       new java.io.File(CsvDirtyFixtureDir).mkdirs()
-      val rows = s.read.parquet(s"$dir/nation.parquet")
+      val rows = PsIO.parquet(s, s"$dir/nation.parquet")
         .orderBy("n_nationkey")
         .collect()
         .map(r => s"${r.getInt(0)},${r.getString(1)},${r.getInt(2)}")
@@ -3316,7 +3316,7 @@ object ExtQueries {
     })
   private def manifestFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"manifest:$dir", _ => {
-      s.read.parquet(s"$dir/documents.parquet").repartition(3)
+      PsIO.parquet(s, s"$dir/documents.parquet").repartition(3)
         .write.mode("overwrite").parquet(ManifestFixtureDir)
       // deterministic basenames: Spark's part-file UUIDs would churn the
       // per-file `file` column of q_file_manifest / q_parquet_stats on
@@ -3339,17 +3339,17 @@ object ExtQueries {
     })
   private def orcFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"orc:$dir", _ =>
-      PsIO.toOrc(s.read.parquet(s"$dir/nation.parquet").coalesce(1),
+      PsIO.toOrc(PsIO.parquet(s, s"$dir/nation.parquet").coalesce(1),
         OrcFixtureDir, codec = Some("zstd")))
   private def avroFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"avro:$dir", _ =>
       graft.sources.AvroIo.toAvro(
-        s.read.parquet(s"$dir/nation.parquet").repartition(3), AvroFixtureDir))
+        PsIO.parquet(s, s"$dir/nation.parquet").repartition(3), AvroFixtureDir))
   private def avroEvolvedFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"avroevo:$dir", _ => {
       // two writer-schema generations merged into ONE directory, the
       // way a long-lived Kafka connect sink actually leaves them
-      val n = s.read.parquet(s"$dir/nation.parquet")
+      val n = PsIO.parquet(s, s"$dir/nation.parquet")
       val g1 = n.filter(col("n_nationkey") < 12)
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
         .coalesce(1)
@@ -3462,7 +3462,7 @@ object ExtQueries {
       rmTree(AvroSinkZoneDir)
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
-      val rows = s.read.parquet(s"$dir/nation.parquet")
+      val rows = PsIO.parquet(s, s"$dir/nation.parquet")
         .select("n_nationkey", "n_name", "n_regionkey")
         .collect()
         .map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
@@ -3529,7 +3529,7 @@ object ExtQueries {
   private def avroDsv2WriteFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"avrodsv2write:$dir", _ => {
       rmTree(AvroDsv2WriteDir)
-      val nation = s.read.parquet(s"$dir/nation.parquet")
+      val nation = PsIO.parquet(s, s"$dir/nation.parquet")
         .select("n_nationkey", "n_name", "n_regionkey")
       nation.filter(col("n_nationkey") < 12)
         .write.format("graft-avro").option("codec", "zstandard")
@@ -3549,7 +3549,7 @@ object ExtQueries {
   private def lakeVersionsFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"lakeversions:$dir", _ => {
       rmTree(LakeVersionsDir)
-      val nation = s.read.parquet(s"$dir/nation.parquet")
+      val nation = PsIO.parquet(s, s"$dir/nation.parquet")
         .select("n_nationkey", "n_name", "n_regionkey")
       graft.sources.LakeVersions.commit(s, LakeVersionsDir,
         nation.filter(col("n_nationkey") < 12), overwrite = true): Unit
@@ -3589,7 +3589,7 @@ object ExtQueries {
   private def lakeVersionsPartFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"lakeversionspart:$dir", _ => {
       rmTree(LakeVersionsPartDir)
-      val nation = s.read.parquet(s"$dir/nation.parquet")
+      val nation = PsIO.parquet(s, s"$dir/nation.parquet")
         .select("n_nationkey", "n_name", "n_regionkey")
       graft.sources.LakeVersions.commit(s, LakeVersionsPartDir,
         nation.filter(col("n_nationkey") < 12), overwrite = true,
@@ -3610,7 +3610,7 @@ object ExtQueries {
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
   private def lakePruneBounds(s: SparkSession, dir: String): (Long, Long) =
     lakePruneBoundsCache.computeIfAbsent(dir, _ => {
-      val maxId = s.read.parquet(s"$dir/customer.parquet")
+      val maxId = PsIO.parquet(s, s"$dir/customer.parquet")
         .agg(max("c_custkey")).head().getLong(0)
       (maxId / 3 / 4, maxId / 3 / 2)
     })
@@ -3623,7 +3623,7 @@ object ExtQueries {
   private def lakeOptimizeFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"lakeoptimize:$dir", _ => {
       rmTree(LakeOptimizeDir)
-      val cust = s.read.parquet(s"$dir/customer.parquet")
+      val cust = PsIO.parquet(s, s"$dir/customer.parquet")
         .select("c_custkey", "c_nationkey")
       val maxId = cust.agg(max("c_custkey")).head().getLong(0)
       val (cut1, cut2) = (maxId / 3, 2 * maxId / 3)
@@ -3671,7 +3671,7 @@ object ExtQueries {
       lakeDir: String, n: Int = 3,
       statsCol: String = "c_custkey"): (Long, Long) = {
     rmTree(lakeDir)
-    val cust = s.read.parquet(s"$dir/customer.parquet")
+    val cust = PsIO.parquet(s, s"$dir/customer.parquet")
       .select("c_custkey", "c_name")
     val maxId = cust.agg(max("c_custkey")).head().getLong(0)
     val (cut1, cut2) = (maxId / 3, 2 * maxId / 3)
@@ -3709,7 +3709,7 @@ object ExtQueries {
   private def lakeMergeFixture(s: SparkSession, dir: String): (Long, Int, Int) =
     lakeMergeDone.computeIfAbsent(dir, _ => {
       val (cut1, _) = terciledCustomerLake(s, dir, LakeMergeDir, n = 2)
-      val source = s.read.parquet(s"$dir/customer.parquet")
+      val source = PsIO.parquet(s, s"$dir/customer.parquet")
         .filter(col("c_custkey") > cut1)
         .select(col("c_custkey"),
           concat(lit("MRG:"), col("c_name")).as("c_name"))
@@ -3750,7 +3750,7 @@ object ExtQueries {
       val w1 = graft.sources.LakeVersions.consumeAppends(s, LakeConsumeDir,
         ck)(df => df.write.mode("append").parquet(target))
       graft.sources.LakeVersions.commit(s, LakeConsumeDir,
-        s.read.parquet(s"$dir/customer.parquet")
+        PsIO.parquet(s, s"$dir/customer.parquet")
           .filter(col("c_custkey") > cut2)
           .select("c_custkey", "c_name").coalesce(1),
         statsCols = Seq("c_custkey")): Unit
@@ -3779,7 +3779,7 @@ object ExtQueries {
   private def avroNestedFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"avronested:$dir", _ =>
       graft.sources.AvroIo.toAvro(
-        s.read.parquet(s"$dir/orders.parquet")
+        PsIO.parquet(s, s"$dir/orders.parquet")
           .filter(col("o_orderkey") < 200)
           .select(col("o_orderkey"),
             struct(col("o_custkey").as("custkey"),
@@ -3804,7 +3804,7 @@ object ExtQueries {
       // three files with TIGHT DISJOINT doc_id envelopes (the layout
       // writeSorted produces) so range predicates genuinely prune —
       // deterministic part names for the oracle's per-file compare
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = PsIO.parquet(s, s"$dir/documents.parquet")
         .select("doc_id", "n_chars")
       val maxId = docs.agg(max("doc_id")).head().getLong(0)
       val cut1 = maxId / 3
@@ -3841,14 +3841,14 @@ object ExtQueries {
     fixturesDone.computeIfAbsent(s"pkl:$dir", _ => {
       new java.io.File(PickleFixturePath).getParentFile.mkdirs()
       PsIO.toPickle(
-        s.read.parquet(s"$dir/nation.parquet").orderBy("n_nationkey"),
+        PsIO.parquet(s, s"$dir/nation.parquet").orderBy("n_nationkey"),
         PickleFixturePath)
     })
   private def npyFixture(s: SparkSession, dir: String): Unit =
     fixturesDone.computeIfAbsent(s"npy:$dir", _ => {
       new java.io.File(NpyFixturePath).getParentFile.mkdirs()
       PsIO.toNpy(
-        s.read.parquet(s"$dir/nation.parquet").orderBy("n_nationkey")
+        PsIO.parquet(s, s"$dir/nation.parquet").orderBy("n_nationkey")
           .select(array(col("n_nationkey").cast("double"),
             col("n_regionkey").cast("double")).as("v")),
         "v", NpyFixturePath)

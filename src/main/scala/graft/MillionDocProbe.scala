@@ -4,6 +4,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, Dedup}
+import graft.sources.PsIO
 
 /** Absolute-scale dedup run (round-14 ask): the ×N probes grow from
   * small bases and report exponents; a capacity planner also needs one
@@ -55,7 +56,7 @@ object MillionDocProbe {
     val base = java.nio.file.Files.createTempDirectory("graft-1m").toString
     val corpus = s"$base/corpus"
     measure("corpus build+write") {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = PsIO.parquet(spark, s"$sfDir/documents.parquet")
       docs
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           col("n_chars"), explode(sequence(lit(0), lit(copies - 1))).as("copy"))
@@ -64,7 +65,7 @@ object MillionDocProbe {
             concat(lit("$1_"), col("copy"))).as("text"),
           col("lang"), col("source"), col("n_chars"))
         .write.mode("overwrite").parquet(corpus)
-      spark.read.parquet(corpus).count()
+      PsIO.parquet(spark, corpus).count()
     }
     val corpusBytes = {
       val d = new java.io.File(corpus)
@@ -72,7 +73,7 @@ object MillionDocProbe {
     }
     println(f"[1M] corpus on disk: ${corpusBytes / 1e6}%.1f MB")
 
-    val c = spark.read.parquet(corpus)
+    val c = PsIO.parquet(spark, corpus)
 
     // LSH candidate volume BEFORE any verify work — the pair-join
     // fan-out, Σ C(|bucket|,2) over (band, bucket) groups
@@ -88,9 +89,9 @@ object MillionDocProbe {
     measure("minhashLsh pairs") {
       Dedup.minhashLsh(c, "doc_id", "text")
         .write.mode("overwrite").parquet(pairsPath)
-      spark.read.parquet(pairsPath).count()
+      PsIO.parquet(spark, pairsPath).count()
     }
-    val pairs = spark.read.parquet(pairsPath)
+    val pairs = PsIO.parquet(spark, pairsPath)
 
     // duplicate clusters over the verified pairs
     measure("clusterLabels") {

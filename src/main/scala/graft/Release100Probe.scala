@@ -48,7 +48,7 @@ object Release100Probe {
       }
     })
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = PsIO.parquet(spark, s"$sfDir/documents.parquet")
     val base = java.nio.file.Files.createTempDirectory("graft-x100").toString
 
     def corpusPath(f: Int): String = {
@@ -81,7 +81,7 @@ object Release100Probe {
 
     def runAt(f: Int): Map[String, Meas] = {
       println(s"[x100] ===== scale x$f (${5000L * f} docs) =====")
-      val c = spark.read.parquet(corpusPath(f))
+      val c = PsIO.parquet(spark, corpusPath(f))
       var out = Map.empty[String, Meas]
 
       // the verbatim q_pipeline_release composition (fixed 8000-token
@@ -107,7 +107,7 @@ object Release100Probe {
         // count is a footer scan.
         val outPath = s"$base/release_x$f"
         cut.write.mode("overwrite").parquet(outPath)
-        spark.read.parquet(outPath).count()
+        PsIO.parquet(spark, outPath).count()
       }
       PersistedPlans.clear()
 

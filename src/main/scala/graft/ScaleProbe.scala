@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.sources.PsIO
 
 /** Hot-shingle stress probe: duplicates the `documents` corpus ×N (each
   * copy under a fresh doc_id) so every shingle's document frequency — and
@@ -26,7 +27,7 @@ object ScaleProbe {
     val dup = if (args.length > 1) args(1).toInt else 10
     val spark = Session.local(32, "graft-scale-probe")
 
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = PsIO.parquet(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     val docs = (0 until dup).map { i =>
       base.select((col("doc_id") * dup + i).as("doc_id"), col("text"))
@@ -70,7 +71,7 @@ object ScaleProbe {
     // ---- ANN paths on the duplicated embedding corpus ------------------
     // each copy gets a tiny deterministic per-copy shift so duplicates are
     // near- (not exact-) neighbors — the realistic near-dup profile
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = PsIO.parquet(spark, s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")
     val corpus = (0 until dup).map { i =>
       emb.select((col("vec_id") * dup + i).as("vec_id"),
@@ -202,7 +203,7 @@ object ScaleProbe {
     // points = duplicated order prices; intervals = 2k price bands. The
     // nested loop is O(points·intervals) so it gets a 10%-sample handicap
     // and STILL loses; the bucketized form runs the full corpus.
-    val orders0 = spark.read.parquet(s"$sfDir/orders.parquet")
+    val orders0 = PsIO.parquet(spark, s"$sfDir/orders.parquet")
       .select(col("o_orderkey"), col("o_totalprice"))
     val points = (0 until dup).map { i =>
       orders0.select((col("o_orderkey") * dup + i).as("p_id"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.PsIO
 
 /** Declarative data-quality constraint checking — the validation gate an
   * ingest pipeline runs before data is allowed into a corpus (the same
@@ -150,7 +151,7 @@ object Checks {
     // path-based dimensions resolve to scans here, once — everything
     // downstream treats them as ordinary RefIn
     val rules = rawRules.map {
-      case RefInParquet(c, p, d) => RefIn(c, df.sparkSession.read.parquet(p), d)
+      case RefInParquet(c, p, d) => RefIn(c, PsIO.parquet(df.sparkSession, p), d)
       case r => r
     }
     val total = count(lit(1)).as("total")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.PsIO
 
 /** Distribution-drift report between two corpus snapshots (e.g. last
   * month's crawl vs this month's): per-column Population Stability
@@ -193,7 +194,7 @@ object Drift {
   /** Load a spec saved by [[saveSpec]]; ResolvedDim's constructor
     * guards re-validate the loaded edges. */
   def loadSpec(spark: org.apache.spark.sql.SparkSession, path: String): DriftSpec = {
-    val rows = spark.read.parquet(path).collect() // KBs by construction
+    val rows = PsIO.parquet(spark, path).collect() // KBs by construction
     val dims = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
       val marker = rs.find(_.getInt(3) == -1).getOrElse(
         throw new IllegalStateException(s"Drift.loadSpec: missing marker row in $path"))

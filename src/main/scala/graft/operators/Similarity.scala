@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
+import graft.sources.PsIO
 
 /** Similarity search over an embedding column (`array<float|double>`).
   *
@@ -186,7 +187,7 @@ object Similarity {
   }
 
   def loadIvfIndex(spark: SparkSession, path: String): IvfIndex = {
-    val rows = spark.read.parquet(path)
+    val rows = PsIO.parquet(spark, path)
       .select("cell", "pos", "value").collect()
     val cells = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
     IvfIndex(cells.map { case (_, rs) =>
@@ -361,7 +362,7 @@ object Similarity {
   }
 
   def loadPqCodebook(spark: SparkSession, path: String): PqCodebook = {
-    val rows = spark.read.parquet(path)
+    val rows = PsIO.parquet(spark, path)
       .select("sub", "code", "pos", "value").collect()
     PqCodebook(rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, subRows) =>
       subRows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map { case (_, centRows) =>

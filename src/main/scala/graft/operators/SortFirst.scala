@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
+import graft.plans.SmallSortRule
 
 /** Sort-first projection — the plan shape for `scan → heavy row-local
   * exprs → total ORDER BY` queries.
@@ -30,6 +31,14 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project
   * spark.sql.shuffle.partitions, so it scales with the session's
   * configuration, not with this machine.
   *
+  * The explicit `p` applies only to scans of at least
+  * [[SmallSortRule.MaxBytes]]. Below it, the order is stated as a plain
+  * global sort, which [[SmallSortRule]] plans in one partition: the
+  * sampling job and the range-shuffle stage cost more than running the
+  * heavy projection over a few hundred KB in one task (`q_textstats`
+  * went from 4 Spark jobs per action to 1). Both forms are the same
+  * total order, with AQE on or off.
+  *
   * Scale trade, stated honestly: the exchange now carries the projection
   * INPUTS (for text analytics, the document text) instead of its usually
   * narrower outputs. That is the right trade for expression chains that
@@ -46,10 +55,8 @@ object SortFirst {
     * output order to be deterministic — same requirement the trailing
     * ORDER BY had. */
   def project(df: DataFrame, keys: Seq[Column])(
-      heavy: DataFrame => DataFrame): DataFrame = {
-    val p = df.sparkSession.sessionState.conf.numShufflePartitions
-    heavy(df.repartitionByRange(p, keys: _*).sortWithinPartitions(keys: _*))
-  }
+      heavy: DataFrame => DataFrame): DataFrame =
+    heavy(rangeOrdered(df, keys).sortWithinPartitions(keys: _*))
 
   /** The expansion variant: for a row-local `expand` (explode / stack /
     * chunk) whose final ORDER BY keys extend the pre-expansion keys,
@@ -65,9 +72,19 @@ object SortFirst {
     * order to be deterministic. */
   def expandLocalSort(
       df: DataFrame, prefix: Seq[Column], full: Seq[Column])(
-      expand: DataFrame => DataFrame): DataFrame = {
-    val p = df.sparkSession.sessionState.conf.numShufflePartitions
-    expand(df.repartitionByRange(p, prefix: _*)).sortWithinPartitions(full: _*)
+      expand: DataFrame => DataFrame): DataFrame =
+    expand(rangeOrdered(df, prefix)).sortWithinPartitions(full: _*)
+
+  /** `df` split into partitions that tile the total order of `keys`: a
+    * global sort, planned in one partition by [[SmallSortRule]], when
+    * `df` scans fewer than [[SmallSortRule.MaxBytes]]; otherwise
+    * range-partitioned into the session's shuffle partitions (see the
+    * object doc). Rows within a partition are sorted only in the first
+    * case; callers sort them locally. */
+  private def rangeOrdered(df: DataFrame, keys: Seq[Column]): DataFrame = {
+    val scanned = SmallSortRule.scanBytes(df.queryExecution.analyzed)
+    if (scanned.exists(_ < SmallSortRule.MaxBytes)) df.orderBy(keys: _*)
+    else df.repartitionByRange(df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
   }
 
   /** Round-robin `df` up to the session's shuffle parallelism when its

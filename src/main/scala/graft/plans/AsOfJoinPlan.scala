@@ -81,7 +81,10 @@ object GraftStrategy extends SparkStrategy {
 }
 
 /** Entry point for `spark.sql.extensions` / `builder.withExtensions`.
-  * Besides the planner strategy and optimizer rule, the codegen'd vector
+  * It registers the planner strategy ([[GraftStrategy]]), the optimizer
+  * rule ([[RangeJoinRule]]) and the AQE query-stage preparation rule
+  * [[SmallSortRule]], which sorts small global sorts in one partition
+  * instead of sampling them into a range shuffle. The codegen'd vector
   * and shingle expressions register as SQL functions, so a pure-SQL user
   * gets the same hot paths the DataFrame operators use. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -100,6 +103,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => GraftStrategy)
     ext.injectOptimizerRule(_ => RangeJoinRule)
+    ext.injectQueryStagePrepRule(_ => SmallSortRule)
     ext.injectFunction(fn("graft_dot", classOf[ArrayDotProduct], 2)(es =>
       ArrayDotProduct(es(0), es(1))))
     ext.injectFunction(fn("graft_cosine", classOf[ArrayCosineSimilarity], 2)(es =>

@@ -1,6 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetBridge, ParquetFileFormat}
+import org.apache.spark.sql.types.StructType
 import graft.api.PsDataFrame
 
 /** Ingest / egress.
@@ -9,14 +12,29 @@ import graft.api.PsDataFrame
   * chunked 10k-row loading when predicted OOM, and a direct SQLite
   * `.import` with types sniffed from the first 1,000 lines (reference:
   * pandasql/io.py:12-66). On Spark all three collapse: file sources are
-  * already streamed, partitioned (`spark.sql.files.maxPartitionBytes`
-  * splits), and schema-inferred; out-of-core is native. At 100 TB the scan
-  * parallelism comes from file splits — no driver-side chunk loop.
+  * already streamed and partitioned (`spark.sql.files.maxPartitionBytes`
+  * splits); out-of-core is native. At 100 TB the scan parallelism comes
+  * from file splits — no driver-side chunk loop.
+  *
+  * Parquet schemas are read from metadata, never from data: every
+  * parquet read in the library goes through [[parquet]], whose
+  * [[GraftParquetFormat]] reads the footers Spark's inference would pick
+  * on the driver, so composing a query starts no Spark job (LazinessSpec)
+  * and each read lists its path once. CSV and JSON readers without a
+  * schema still infer it from the data, which is a job.
   */
 object PsIO {
 
   def readParquet(spark: SparkSession, path: String): PsDataFrame =
-    PsDataFrame(spark.read.parquet(path))
+    PsDataFrame(parquet(spark, path))
+
+  /** `spark.read.parquet(paths: _*)`, the same relation (Spark's file
+    * index, partition discovery, options and scan), with the data schema
+    * read from the footers on the driver instead of in an inference job:
+    * see [[GraftParquetFormat]]. A source lint (SessionBuilderLintSpec)
+    * keeps every other schema-less parquet read out of `src/main`. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.format(classOf[GraftParquetFormat].getName).load(paths: _*)
 
   /** reference io.py:12-28 — header + schema inference on by default;
     * `sep`/`names` mirror the pandas kwargs the reference forwards.
@@ -280,7 +298,7 @@ object PsIO {
     // this loader normalizes to; logged so the effect is visible).
     val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
     val raw =
-      try spark.read.parquet(path)
+      try parquet(spark, path)
       catch {
         case e: Exception
             if e.getMessage != null && e.getMessage.contains("NANOS") &&
@@ -290,7 +308,7 @@ object PsIO {
             s"readEventsNs: $path carries TIMESTAMP(NANOS); enabling " +
               s"$NanosKey for the session (NANOS columns read as ns longs)")
           spark.conf.set(NanosKey, "true")
-          spark.read.parquet(path)
+          parquet(spark, path)
       }
     raw.schema("ts").dataType match {
       case LongType => raw // ns-as-long file: already the target shape
@@ -381,7 +399,7 @@ object PsIO {
       paths: Seq[String],
       conflicts: ConflictPolicy = DropConflicts): PsDataFrame = {
     require(paths.nonEmpty, "readParquetEvolved: no generation paths")
-    val gens = paths.map(p => spark.read.parquet(p))
+    val gens = paths.map(p => parquet(spark, p))
     val schemas = gens.map(_.schema)
     val names = scala.collection.mutable.LinkedHashSet[String]()
     schemas.foreach(_.foreach(f => names += f.name))
@@ -416,7 +434,7 @@ object PsIO {
     * fact, not a silent cast. */
   def parquetSchemaDrift(spark: SparkSession, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "parquetSchemaDrift: no generation paths")
-    val schemas = paths.map(p => spark.read.parquet(p).schema)
+    val schemas = paths.map(p => parquet(spark, p).schema)
     val names = scala.collection.mutable.LinkedHashSet[String]()
     schemas.foreach(_.foreach(f => names += f.name))
     val rows = names.toSeq.map { n =>
@@ -455,7 +473,7 @@ object PsIO {
     val intLike: Set[org.apache.spark.sql.types.DataType] = Set(
       org.apache.spark.sql.types.IntegerType,
       org.apache.spark.sql.types.LongType)
-    val schema = spark.read.parquet(path).schema
+    val schema = parquet(spark, path).schema
     columns.foreach { c =>
       val f = schema.find(_.name == c).getOrElse(throw new IllegalArgumentException(
         s"parquetStats: column $c not in $path (${schema.fieldNames.mkString(", ")})"))
@@ -757,7 +775,7 @@ object PsIO {
       bytes
     }
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val in = spark.read.parquet(inDir)
+    val in = parquet(spark, inDir)
     val sized = if (shuffle) in.repartition(nFiles) else in.coalesce(nFiles)
     sized.write.mode(SaveMode.Overwrite).parquet(outDir)
     nFiles
@@ -854,4 +872,20 @@ object PsIO {
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
       .saveAsTable(table)
+}
+
+/** Spark's parquet file format with one change: [[inferSchema]] reads the
+  * footers on the driver ([[GraftParquetBridge.footerSchema]]: the same
+  * files, converter and merge as Spark's inference job) rather than in a
+  * Spark job. Spark's `DataSource` still lists the path once, discovers
+  * the partition columns from that file index and builds the relation
+  * over the same listing, so the frame equals `spark.read.parquet`'s
+  * (ParquetSchemaSpec). `ParquetFileFormat` equality is by type, so
+  * plans and cached frames over either format match. */
+final class GraftParquetFormat extends ParquetFileFormat {
+  override def inferSchema(
+      spark: SparkSession,
+      options: Map[String, String],
+      files: Seq[FileStatus]): Option[StructType] =
+    GraftParquetBridge.footerSchema(spark, options, files)
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
+import graft.sources.PsIO
 
 /** Structured-Streaming operators over the `events` stream shape
   * (event_id, ts, user_id, event_type, value, props).
@@ -186,7 +187,7 @@ object StreamingOps {
                 // fall back to the cached reference (the swap lands
                 // next batch) unless there is nothing to fall back to
                 try cached = (sig, graft.operators.Drift.collectReference(
-                  s.read.parquet(refCountsPath)))
+                  PsIO.parquet(s, refCountsPath)))
                 catch { case scala.util.control.NonFatal(e) =>
                   if (cached == null) throw e
                 }

@@ -4,29 +4,26 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Compose-time laziness, engine-wide: DECLARING a query must not
-  * materialize anything — execution belongs to the action. This is the
+  * start a Spark job — execution belongs to the action. This is the
   * regression guard for the eager-at-compose class of defect (round 2's
   * tfIdf `docs.count()`, round 3-4's ivfTopK compose-time Lloyd
   * training): any new query entry that sneaks a collect/count/head into
   * composition fails here by name.
   *
-  * Reading a source does schedule bounded METADATA jobs at compose time
-  * (parquet footer reads, csv/json schema inference) — those are the
-  * price of schema resolution, not hidden materialization, and are
-  * recognized by their scan-shaped callsites. Anything else (collect at
-  * / count at / head at ...) is an offender.
+  * There is no callsite waiver. Parquet schemas come from footers read
+  * on the driver (`PsIO.parquet`), so a schema-inference job is an
+  * offender like any other; only the queries named in [[composesJobs]]
+  * may start jobs, each for the reason given there.
   */
 class LazinessSpec extends AnyFunSuite with SparkFixture {
 
-  /** Queries whose compose legitimately computes: the reference's
-    * per-column agg sugar (`df("c").sum()`) returns driver-side scalars
-    * by API contract. */
-  private val eagerByDesign = Set("q_colagg")
-
-  /** callSite.short forms of schema-resolution scan jobs. */
-  private def isMetadataScan(cs: String): Boolean =
-    cs.startsWith("parquet at") || cs.startsWith("csv at") ||
-      cs.startsWith("json at") || cs.startsWith("load at")
+  /** Queries whose compose legitimately starts jobs:
+    *  - `q_colagg`: the reference's per-column agg sugar
+    *    (`df("c").sum()`) returns driver-side scalars by API contract;
+    *  - `q_read_csv`, `q_read_json`, `q_json_quarantine`: their CSV and
+    *    JSON readers infer the schema from the data, which is a scan. */
+  private val composesJobs =
+    Set("q_colagg", "q_read_csv", "q_read_json", "q_json_quarantine")
 
   test("composing every SparkEntry query materializes nothing") {
     val dir = "/root/testdata/sf0.001"
@@ -34,25 +31,24 @@ class LazinessSpec extends AnyFunSuite with SparkFixture {
     val listener = new SparkListener {
       override def onJobStart(jobStart: SparkListenerJobStart): Unit =
         // the job's callsite is the name of its final stage
-        // (e.g. "parquet at PsIO.scala:20", "collect at Foo.scala:7")
+        // (e.g. "collect at Foo.scala:7")
         jobStart.stageInfos.lastOption.foreach(si => callsites.add(si.name))
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       // warm-up compose: one-time per-process setup (the IVF index
       // build, ingestion fixtures) is allowed its jobs ONCE — a second
-      // compose must then be metadata-only
+      // compose must then start none
       SparkEntry.queries.foreach { case (_, f) => f(spark, dir) }
       awaitQuiescent(callsites)
       callsites.clear()
 
       val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, f) if !eagerByDesign.contains(name) =>
+        case (name, f) if !composesJobs.contains(name) =>
           f(spark, dir) // compose only — no action
           awaitQuiescent(callsites)
           val bad = scala.jdk.CollectionConverters
             .CollectionHasAsScala(callsites).asScala.toList
-            .filterNot(isMetadataScan)
           callsites.clear()
           if (bad.nonEmpty) Some(s"$name -> ${bad.mkString("; ")}") else None
         case _ => None

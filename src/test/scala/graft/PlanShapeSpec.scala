@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -358,5 +361,72 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     }
     assert(joinsAbove(3) == 1)
     assert(joinsAbove(30) == 1, "the plan grew with the graph's diameter")
+  }
+
+  // ---- SmallSortRule: small global sorts in one partition -----------
+
+  private def rangeExchanges(nodes: Seq[SparkPlan]) = nodes.collect {
+    case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+  }
+
+  private def coalesces(nodes: Seq[SparkPlan]) =
+    nodes.collect { case c: CoalesceExec => c.numPartitions }
+
+  test("a small grouped sort runs in one partition: no range exchange, no sampling") {
+    val q = lineitem.df.groupBy("l_orderkey")
+      .agg(sum("l_quantity").as("s"), count(lit(1)).as("n")).orderBy("l_orderkey")
+    val nodes = TestSpark.ranNodes(q)
+    assert(coalesces(nodes) == Seq(1), nodes.head.treeString)
+    assert(rangeExchanges(nodes).isEmpty, nodes.head.treeString)
+    val keys = q.collect().map(_.getLong(0)).toSeq
+    assert(keys.nonEmpty && keys == keys.sorted)
+  }
+
+  test("a grouped sort above SmallSortRule.MaxBytes keeps its RangePartitioning") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bigsort").toString + "/t"
+    // 60k distinct keys with 64-char payloads: the aggregate's shuffle
+    // carries several MiB, above the rule's bound
+    spark.range(60000).select(col("id"), sha2(col("id").cast("string"), 256).as("h"))
+      .write.parquet(dir)
+    val q = PsIO.parquet(spark, dir).groupBy("id").agg(max("h").as("h")).orderBy("id")
+    val nodes = TestSpark.ranNodes(q)
+    assert(rangeExchanges(nodes).nonEmpty, nodes.head.treeString)
+    assert(coalesces(nodes).isEmpty, nodes.head.treeString)
+  }
+
+  test("a sort over an inner join or an explode keeps its RangePartitioning") {
+    val li = lineitem.df
+    val orders = PsIO.parquet(spark, "/root/testdata/sf0.001/orders.parquet")
+    val joined = li.join(orders, li("l_orderkey") === orders("o_orderkey"))
+      .select("l_orderkey", "l_linenumber", "o_totalprice")
+      .orderBy("l_orderkey", "l_linenumber")
+    val exploded = li.select(col("l_orderkey"), col("l_linenumber"),
+        explode(array(lit(1), lit(2))).as("x"))
+      .orderBy("l_orderkey", "l_linenumber", "x")
+    Seq(joined, exploded).foreach { q =>
+      val nodes = TestSpark.ranNodes(q)
+      assert(rangeExchanges(nodes).nonEmpty, nodes.head.treeString)
+      assert(coalesces(nodes).isEmpty, nodes.head.treeString)
+    }
+  }
+
+  test("a sort over a left anti join is sized by its left side") {
+    val li = lineitem.df
+    val orders = PsIO.parquet(spark, "/root/testdata/sf0.001/orders.parquet")
+      .filter(col("o_orderkey") % 3 === 0)
+    val q = li.join(orders, li("l_orderkey") === orders("o_orderkey"), "left_anti")
+      .select("l_orderkey", "l_linenumber").orderBy("l_orderkey", "l_linenumber")
+    val nodes = TestSpark.ranNodes(q)
+    assert(coalesces(nodes) == Seq(1), nodes.head.treeString)
+    assert(rangeExchanges(nodes).isEmpty, nodes.head.treeString)
+  }
+
+  test("repartitionByRange(4, k) keeps its 4 partitions") {
+    val q = lineitem.df.repartitionByRange(4, col("l_orderkey"))
+      .select(spark_partition_id().as("p"))
+    val nodes = TestSpark.ranNodes(q)
+    assert(rangeExchanges(nodes).map(_.outputPartitioning.numPartitions) == Seq(4),
+      nodes.head.treeString)
+    assert(q.distinct().collect().length == 4)
   }
 }

@@ -16,7 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - file-commit protocols (attempt renames, directory swaps, commit
   *    markers) live in `graft.sources`: a Hadoop `FileSystem.rename`
   *    anywhere else is one more hand-rolled protocol that every crash
-  *    test would have to cover. */
+  *    test would have to cover;
+  *  - parquet is read through `PsIO.parquet`: a schema-less
+  *    `read.parquet(` anywhere else infers its schema in a Spark job
+  *    while the query is only being composed (LazinessSpec). */
 class SessionBuilderLintSpec extends AnyFunSuite {
 
   private lazy val sources: List[Path] = {
@@ -48,5 +51,15 @@ class SessionBuilderLintSpec extends AnyFunSuite {
       rename.findFirstIn(_).isDefined)
     assert(found.isEmpty,
       s"file renames outside graft.sources: ${found.mkString(", ")}")
+  }
+
+  test("a schema-less parquet read appears only in PsIO") {
+    val read = """\bread\s*\.\s*(parquet\(|format\("parquet"\))""".r
+    val found = hits(_.getFileName.toString == "PsIO.scala", { line =>
+      val code = line.trim
+      !code.startsWith("//") && !code.startsWith("*") && read.findFirstIn(code).isDefined
+    })
+    assert(found.isEmpty,
+      s"schema-inferring parquet reads; use PsIO.parquet: ${found.mkString(", ")}")
   }
 }

@@ -53,6 +53,42 @@ class SortFirstSpec extends AnyFunSuite {
     assert(rewritten == natural)
   }
 
+  test("a scan below SmallSortRule.MaxBytes sorts in one partition, above it by range") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def rangeParts(nodes: Seq[SparkPlan]) = nodes.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+        e.outputPartitioning.numPartitions
+    }
+    val heavy = (df: org.apache.spark.sql.DataFrame) =>
+      df.select(col("doc_id"), md5(col("text")).as("h"))
+    val expand = (df: org.apache.spark.sql.DataFrame) =>
+      df.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-sortfirst").toString
+    docs.write.parquet(dir + "/small")
+    // 60k rows of 64-char hashes: several MiB of parquet, above the bound
+    spark.range(60000).select(col("id").as("doc_id"),
+        concat_ws(" ", sha2(col("id").cast("string"), 256), lit("x")).as("text"))
+      .write.parquet(dir + "/big")
+    val p = spark.sessionState.conf.numShufflePartitions
+    for ((name, parts) <- Seq("small" -> Seq.empty[Int], "big" -> Seq(p))) {
+      val in = graft.sources.PsIO.parquet(spark, s"$dir/$name")
+      val projected = SortFirst.project(in, Seq(col("doc_id")))(heavy)
+      val expanded = SortFirst.expandLocalSort(in,
+        Seq(col("doc_id")), Seq(col("doc_id"), col("tok")))(expand)
+      assert(projected.collect().toSeq == heavy(in).orderBy("doc_id").collect().toSeq)
+      assert(expanded.collect().toSeq ==
+        expand(in).orderBy("doc_id", "tok").collect().toSeq)
+      for (q <- Seq(projected, expanded)) {
+        val nodes = TestSpark.ranNodes(q)
+        assert(rangeParts(nodes) == parts, nodes.head.treeString)
+        assert(nodes.collect { case c: CoalesceExec => c.numPartitions } ==
+          (if (parts.isEmpty) Seq(1) else Nil), nodes.head.treeString)
+      }
+    }
+  }
+
   test("widenScanSide: a streaming frame comes back unchanged, no job starts") {
     val in = spark.readStream.format("rate").load().filter(col("value") > 0)
     var out: org.apache.spark.sql.DataFrame = null

@@ -37,6 +37,21 @@ object TestSpark {
       n.get
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Every node `df` ran, query stages included: `collect()`s it (not
+    * count(), which plans a query of its own), then walks AQE's final
+    * plan. */
+  def ranNodes(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    df.collect()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case _ => p.children.flatMap(walk)
+    })
+    walk(df.queryExecution.executedPlan)
+  }
 }
 
 trait SparkFixture extends BeforeAndAfterAll { this: org.scalatest.Suite =>
