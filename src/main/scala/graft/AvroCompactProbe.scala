@@ -22,9 +22,9 @@ object AvroCompactProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(32, "graft-avro-compact-probe")
 
-    val in = "/root/repo/target/tmp/avro_compact_probe_in"
-    val outCopy = "/root/repo/target/tmp/avro_compact_probe_copy"
-    val outRewrite = "/root/repo/target/tmp/avro_compact_probe_rewrite"
+    val in = s"${ExtQueries.FixtureRoot}/avro_compact_probe_in"
+    val outCopy = s"${ExtQueries.FixtureRoot}/avro_compact_probe_copy"
+    val outRewrite = s"${ExtQueries.FixtureRoot}/avro_compact_probe_rewrite"
     // the fragmented landing zone: lineitem replicated `rep` times,
     // scattered across `files` small container files (null codec: the
     // probe measures decode/copy mechanics, not inflate)

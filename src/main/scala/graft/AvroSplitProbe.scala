@@ -25,7 +25,7 @@ object AvroSplitProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(32, "graft-avro-split-probe")
 
-    val dir = "/root/repo/target/tmp/avro_split_probe"
+    val dir = s"${ExtQueries.FixtureRoot}/avro_split_probe"
     // ONE container file, hundreds of MB: lineitem replicated `rep`
     // times (null codec: the probe measures decode + split mechanics,
     // not inflate). rep=6 -> ~3.6M rows, ~450 MB raw Avro.

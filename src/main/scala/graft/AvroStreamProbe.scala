@@ -31,7 +31,7 @@ object AvroStreamProbe {
     val spark = Session.local(32, "graft-avro-stream-probe")
     import org.apache.spark.sql.functions.col
 
-    val zone = "/root/repo/target/tmp/avro_stream_probe_zone"
+    val zone = s"${ExtQueries.FixtureRoot}/avro_stream_probe_zone"
     val rep = sys.env.getOrElse("SPARK_GRAFT_AVRO_PROBE_REP", "4").toInt
     val files = sys.env.getOrElse("SPARK_GRAFT_AVRO_PROBE_FILES", "128").toInt
     val li = PsIO.parquet(spark, s"$sfDir/lineitem.parquet")
@@ -144,7 +144,7 @@ object AvroStreamProbe {
     //    sinks actually land — decode + inflate is the dominant cost
     //    there, unlike the null-codec splits zone above).
     def tmpd(p: String) = java.nio.file.Files.createTempDirectory(p).toString
-    val zoneZ = "/root/repo/target/tmp/avro_stream_probe_zone_deflate"
+    val zoneZ = s"${ExtQueries.FixtureRoot}/avro_stream_probe_zone_deflate"
     graft.sources.AvroIo.toAvro(
       Seq.fill(rep * 2)(li).reduce(_ unionAll _).repartition(16), zoneZ,
       codec = Some("deflate"))

@@ -2,9 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-scoped memo for driver-side artifacts (resolved drift label
-  * expressions, Avro header scans): one value per (live session, key),
-  * recomputed whenever the caller-supplied `sig` changes.
+/** Session-scoped memo for driver-side artifacts: one value per (live
+  * session, key), recomputed whenever the caller-supplied `sig` changes.
+  * It holds Avro header scans and every registry memo in
+  * [[graft.ExtQueries]] — fixtures written under its `FixtureRoot`,
+  * trained ANN and BPE artifacts, resolved drift label expressions,
+  * persisted fixture datasets — keyed by the fixture's name with the
+  * data dir as `sig`.
   *
   * Weak-keyed on the session itself — NOT identityHashCode (a hash
   * collision between a GC'd and a new session could serve stale
@@ -20,7 +24,8 @@ import org.apache.spark.sql.SparkSession
   * (session, key) never run the thunk twice for one sig (a racing
   * duplicate can neither double-persist nor see its value released
   * under it), thunks that launch Spark jobs block only same-key
-  * callers, and a thunk may freely re-enter the cache for OTHER keys.
+  * callers, and a thunk may freely re-enter the cache for OTHER keys
+  * (a registry fixture builds the fixtures it depends on that way).
   * (Same-key re-entry from the same thread is reentrant and would
   * recompute — a caller bug either way.)
   */

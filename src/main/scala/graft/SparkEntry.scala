@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{broadcast, col, round}
 import graft.api._
 import graft.sources.PsIO
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every entry in [[queries]] exercises one operator family from
   * SURVEY.md §2 *through the graft library* (PsDataFrame/PsColumn/

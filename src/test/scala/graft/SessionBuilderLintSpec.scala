@@ -19,7 +19,15 @@ import org.scalatest.funsuite.AnyFunSuite
   *    test would have to cover;
   *  - parquet is read through `PsIO.parquet`: a schema-less
   *    `read.parquet(` anywhere else infers its schema in a Spark job
-  *    while the query is only being composed (LazinessSpec). */
+  *    while the query is only being composed (LazinessSpec);
+  *  - no path names one checkout: a literal holding the checkout's
+  *    absolute path makes every checkout on the host write the same
+  *    fixture files, where
+  *    `ExtQueries.FixtureRoot` gives each working directory its own;
+  *  - the registry memoizes through its one `SessionCache`: a
+  *    `ConcurrentHashMap` memo in ExtQueries throws when a fixture
+  *    builds its dependency inside the mapping function, and never
+  *    notices a changed data dir. */
 class SessionBuilderLintSpec extends AnyFunSuite {
 
   private lazy val sources: List[Path] = {
@@ -61,5 +69,19 @@ class SessionBuilderLintSpec extends AnyFunSuite {
     })
     assert(found.isEmpty,
       s"schema-inferring parquet reads; use PsIO.parquet: ${found.mkString(", ")}")
+  }
+
+  test("no source names a path inside one checkout") {
+    val checkout = Paths.get("").toAbsolutePath.toString
+    val found = hits(_ => false, _.contains("\"" + checkout))
+    assert(found.isEmpty,
+      s"checkout-absolute paths; use ExtQueries.FixtureRoot: ${found.mkString(", ")}")
+  }
+
+  test("ExtQueries memoizes through SessionCache, not a ConcurrentHashMap") {
+    val found = hits(_.getFileName.toString != "ExtQueries.scala",
+      _.contains("ConcurrentHashMap"))
+    assert(found.isEmpty,
+      s"hand-rolled registry memos; use ExtQueries.once: ${found.mkString(", ")}")
   }
 }

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The session-scoped memo's refresh contract: per-key atomic computes
   * (a racing duplicate can neither double-compute one sig nor fire
-  * onReplace on a value another caller was just handed) and
-  * release-on-replace only when the sig actually changed. */
+  * onReplace on a value another caller was just handed),
+  * release-on-replace only when the sig actually changed, and thunks
+  * that re-enter the cache for other keys. */
 class SessionCacheSpec extends AnyFunSuite with SparkFixture {
 
   test("same sig: one compute, no onReplace — even under concurrency") {
@@ -56,5 +57,23 @@ class SessionCacheSpec extends AnyFunSuite with SparkFixture {
     assert(c.getOrCompute(s, "k1", "s")("ignored") == "v1")
     val s2 = s.newSession()
     assert(c.getOrCompute(s2, "k1", "s")("other") == "other")
+  }
+
+  test("a thunk may re-enter the cache for other keys: each runs once") {
+    // a chain of 64 keys, each thunk computing the next one's value —
+    // the shape of a registry fixture building its dependency. Enough
+    // keys share a hash bin that a ConcurrentHashMap.computeIfAbsent
+    // nested this way throws IllegalStateException (recursive update).
+    val c = new SessionCache[Int]
+    val s = spark
+    val computes = Array.fill(64)(new AtomicInteger(0))
+    def get(i: Int): Int = c.getOrCompute(s, s"k$i", "dir") {
+      computes(i).incrementAndGet()
+      if (i == 63) 1 else get(i + 1) + 1
+    }
+    assert(get(0) == 64)
+    assert(get(0) == 64 && get(40) == 24)
+    assert(computes.forall(_.get == 1),
+      s"computes per key: ${computes.map(_.get).mkString(",")}")
   }
 }
