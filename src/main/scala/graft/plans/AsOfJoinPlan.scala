@@ -82,9 +82,12 @@ object GraftStrategy extends SparkStrategy {
 
 /** Entry point for `spark.sql.extensions` / `builder.withExtensions`.
   * It registers the planner strategy ([[GraftStrategy]]), the optimizer
-  * rule ([[RangeJoinRule]]) and the AQE query-stage preparation rule
-  * [[SmallSortRule]], which sorts small global sorts in one partition
-  * instead of sampling them into a range shuffle. The codegen'd vector
+  * rule ([[RangeJoinRule]]) and two AQE query-stage preparation rules,
+  * in this order: [[SmallQueryRule]], which plans a query over file
+  * scans under [[SmallSortRule.MaxBytes]] with no exchange or broadcast,
+  * as one stage; then [[SmallSortRule]], which sorts the small global
+  * sorts of the other plans in one partition instead of sampling them
+  * into a range shuffle. The codegen'd vector
   * and shingle expressions register as SQL functions, so a pure-SQL user
   * gets the same hot paths the DataFrame operators use. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -103,6 +106,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => GraftStrategy)
     ext.injectOptimizerRule(_ => RangeJoinRule)
+    ext.injectQueryStagePrepRule(_ => SmallQueryRule)
     ext.injectQueryStagePrepRule(_ => SmallSortRule)
     ext.injectFunction(fn("graft_dot", classOf[ArrayDotProduct], 2)(es =>
       ArrayDotProduct(es(0), es(1))))

@@ -1,5 +1,6 @@
 package graft.plans
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.{HashPartitioner, Partitioner}
@@ -83,7 +84,13 @@ object ConnectedComponents {
   * O(V) not O(E); the edges shuffle once per action, the labels once per
   * round. A celebrity node with millions of edges makes one skewed task
   * (AQE's skew split does not reach RDD shuffles), not a broken
-  * algorithm. */
+  * algorithm.
+  *
+  * A child of ONE partition skips the loop: its pairs are already in
+  * one task, so that task labels them by union-find, each root being its
+  * component's minimum under the ids' ordering. That path runs no
+  * shuffle, no checkpoint and no round, and adds no job to the query's
+  * own. [[SmallQueryRule]] plans small queries that way. */
 case class ConnectedComponentsExec(
     child: SparkPlan,
     a: Attribute,
@@ -104,9 +111,15 @@ case class ConnectedComponentsExec(
   @transient private lazy val labels: RDD[InternalRow] = {
     val dt = a.dataType
     val Seq(ia, ib) = Seq(a, b).map(x => child.output.indexWhere(_.exprId == x.exprId))
-    val edges = symmetrized(child.execute(), ia, ib, dt,
-      new HashPartitioner(conf.numShufflePartitions))
-    val fixpoint = try converge(edges, smaller(dt)) finally edges.unpersist(blocking = true)
+    val rows = child.execute()
+    val min = smaller(dt)
+    val fixpoint =
+      if (rows.getNumPartitions == 1) rows.mapPartitions(unionFind(_, ia, ib, dt, min))
+      else {
+        val edges = symmetrized(rows, ia, ib, dt,
+          new HashPartitioner(conf.numShufflePartitions))
+        try converge(edges, min) finally edges.unpersist(blocking = true)
+      }
     fixpoint.mapPartitions { pairs =>
       val row = new GenericInternalRow(2)
       val unsafe = UnsafeProjection.create(Array[DataType](dt, dt))
@@ -123,6 +136,38 @@ object ConnectedComponentsExec {
   private def smaller(dt: DataType): (Any, Any) => Any = {
     val ord = PhysicalDataType.ordering(dt)
     (x, y) => if (ord.lteq(x, y)) x else y
+  }
+
+  /** `(node, label)` for every node of the pair rows, by union-find in
+    * one task: a pair with a null endpoint is no edge, as in
+    * [[symmetrized]], and the root of every component is its minimum
+    * under `min`, so a node's root is its label. */
+  private def unionFind(rows: Iterator[InternalRow], ia: Int, ib: Int, dt: DataType,
+      min: (Any, Any) => Any): Iterator[(Any, Any)] = {
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var root = x
+      while (parent.get(root) != root) root = parent.get(root)
+      var n = x
+      while (n != root) { val up = parent.get(n); parent.put(n, root); n = up }
+      root
+    }
+    rows.foreach { r =>
+      if (!r.isNullAt(ia) && !r.isNullAt(ib)) {
+        // the row may be a reused buffer: copy string ids out of it
+        val s = InternalRow.copyValue(r.get(ia, dt))
+        val d = InternalRow.copyValue(r.get(ib, dt))
+        parent.putIfAbsent(s, s)
+        parent.putIfAbsent(d, d)
+        val (rs, rd) = (find(s), find(d))
+        if (rs != rd) {
+          if (min(rs, rd) == rs) parent.put(rd, rs) else parent.put(rs, rd)
+        }
+      }
+    }
+    // path compression only rewrites values: no structural change while
+    // the key set is walked
+    parent.keySet.iterator.asScala.map(n => n -> find(n))
   }
 
   /** Symmetrized edge list src -> dst WITH self-loops, from one pass over

@@ -29,11 +29,17 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   * `OrderedDistribution`, so the sort orders every row in one task, with
   * no sampling job and no range-shuffle stage.
   *
-  * Only the sorted relation itself is sized, never the query's input:
-  * explodes and joins multiply rows far past their input bytes. Its
-  * bytes are known in two cases, reached from the exchange through only
-  * Project, Filter, aggregate, window, local-sort, codegen, columnar
-  * transition and AQE-read nodes, none of which adds rows:
+  * It runs after [[SmallQueryRule]], which plans a query whose file
+  * scans sum to under [[MaxBytes]] with no exchange at all, so this
+  * rule sees the other plans: inputs above the bound, or leaves that are
+  * not file scans. Here only the sorted relation itself is sized, never
+  * the query's input: explodes and joins multiply rows far past their
+  * input bytes, and this rule keeps every other stage of the plan, so
+  * it must not pull a large relation into one task ([[SmallQueryRule]]'s
+  * doc gives the sf0.1 sweep of what one task costs just under the
+  * bound). Its bytes are known in two cases, reached from the exchange
+  * through only Project, Filter, aggregate, window, local-sort, codegen,
+  * columnar transition and AQE-read nodes, none of which adds rows:
   *  - a materialized shuffle query stage: its runtime bytes;
   *  - a file scan: its file index's bytes.
   * A left semi or anti join also passes, to its left side only: it

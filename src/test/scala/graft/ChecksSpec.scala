@@ -133,12 +133,27 @@ class ChecksSpec extends AnyFunSuite with SparkFixture {
     assert(scans.size == 1,
       s"4 row-local rules planned ${scans.size} scans, want 1")
     // referential integrity against a small dimension is a broadcast
-    // join, never a shuffle of the fact side
-    val ref = Checks.run(orders, Seq(RefIn("o_custkey", cust, "c_custkey")))
+    // join, never a shuffle of the fact side (orders padded above
+    // SmallQueryRule's bound, so the distributed plan is the one asked)
+    val bigOrders = spark.read.parquet(TestSpark.paddedCopy(orders, 2L << 20))
+    val ref = Checks.run(bigOrders, Seq(RefIn("o_custkey", cust, "c_custkey")))
     val bhj = graft.plans.PlanLint.physicalPlan(ref).collect {
       case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
     }
     assert(bhj.nonEmpty, "RefIn against a small dim must broadcast")
+  }
+
+  test("below MaxBytes, RefIn runs in one stage: no shuffle, no broadcast") {
+    val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    val ref = Checks.run(orders, Seq(RefIn("o_custkey", cust, "c_custkey")))
+    val plan = graft.plans.PlanLint.physicalPlan(ref)
+    assert(plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    }.isEmpty, plan.treeString)
+    val bigOrders = spark.read.parquet(TestSpark.paddedCopy(orders, 2L << 20))
+    assert(ref.collect().toSet ==
+      Checks.run(bigOrders, Seq(RefIn("o_custkey", cust, "c_custkey"))).collect().toSet)
   }
 
   test("RefInParquet: on-disk dimension counts like RefIn; flag still rejects it") {

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Components, Dedup, PersistedPlans, Sampling}
+import graft.plans.ConnectedComponentsExec
 
 class ComponentsSpec extends AnyFunSuite with SparkFixture {
 
@@ -99,6 +100,62 @@ class ComponentsSpec extends AnyFunSuite with SparkFixture {
         Seq("train" -> 0.5, "test" -> 0.5))
       .select("id", "split").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert((1L to 12L).map(split).toSet.size == 1, s"chain split apart: $split")
+  }
+
+  test("differential: one-partition union-find, the 4-partition loop and a model agree") {
+    import org.scalacheck.{Gen, rng}
+    val s = spark
+    import s.implicits._
+    // ids from a small range so components merge; a null endpoint is no
+    // edge; self-loops, duplicate and reversed edges and chains of 13 to
+    // 30 nodes (more rounds than a short graph's diameter) mixed in
+    val id = Gen.chooseNum(0L, 40L)
+    val end = Gen.frequency(9 -> id.map(Option(_)), 1 -> Gen.const(Option.empty[Long]))
+    val edge = Gen.frequency(8 -> Gen.zip(end, end), 1 -> id.map(i => (Some(i), Some(i))))
+    val chain = for {
+      start <- Gen.chooseNum(1L, 9L).map(_ * 100)
+      n <- Gen.chooseNum(13, 30)
+    } yield (0 until n).map(i => (Option(start + i), Option(start + i + 1)))
+    val graph = for {
+      edges <- Gen.chooseNum(0, 60).flatMap(Gen.listOfN(_, edge))
+      chains <- Gen.chooseNum(0, 2).flatMap(Gen.listOfN(_, chain))
+      dups <- Gen.chooseNum(0, 5)
+    } yield {
+      val all = edges ++ chains.flatten
+      all ++ all.take(dups) ++ all.take(dups).map(_.swap)
+    }
+    /** node -> min id of its component, over the non-null pairs. */
+    def model[T](pairs: Seq[(Option[T], Option[T])])(implicit ord: Ordering[T]): Set[(T, T)] = {
+      val parent = scala.collection.mutable.Map[T, T]()
+      def find(x: T): T = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.collect { case (Some(a), Some(b)) => (a, b) }.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
+      }
+      parent.keys.map(n => n -> find(n)).toSet
+    }
+    def labels(pairs: org.apache.spark.sql.DataFrame, partitions: Int): Set[(Any, Any)] = {
+      val df = Components.clusterLabels(pairs)
+      val ccs = TestSpark.ranNodes(df).collect { case c: ConnectedComponentsExec => c }
+      assert(ccs.map(_.child.execute().getNumPartitions) == Seq(partitions))
+      df.collect().map(r => (r.get(0), r.get(1))).toSet
+    }
+    val cases = Gen.listOfN(12, graph).apply(Gen.Parameters.default, rng.Seed(13L)).get
+    cases.foreach { longs =>
+      val strings = longs.map { case (a, b) => (a.map(i => s"n$i"), b.map(i => s"n$i")) }
+      Seq[(org.apache.spark.sql.DataFrame, Set[(Any, Any)])](
+        longs.toDF("a_id", "b_id") -> model(longs).map(p => (p._1: Any, p._2: Any)),
+        strings.toDF("a_id", "b_id") -> model(strings).map(p => (p._1: Any, p._2: Any))
+      ).foreach { case (pairs, want) =>
+        val got = labels(pairs.coalesce(1), 1)
+        assert(got == labels(pairs.repartition(4), 4), s"edges: $longs")
+        assert(got.map { case (n, l) => (n.toString, l.toString) } ==
+          want.map { case (n, l) => (n.toString, l.toString) }, s"edges: $longs")
+      }
+    }
   }
 
   test("clusterLabels frees per-round state: one checkpoint survives an action") {

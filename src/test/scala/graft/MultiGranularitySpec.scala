@@ -48,13 +48,21 @@ class MultiGranularitySpec extends AnyFunSuite with SparkFixture {
     assert(gs == full) // same rows cube produces for those strata
   }
 
+  private def cubePlan(d: graft.api.PsDataFrame): String = d.cube("lang", "source")
+    .aggWithGroupingId("gid", ("n_chars", "count") -> "n")
+    .df.queryExecution.executedPlan.toString
+
   test("cube plans as one Expand + one shuffle, not a job per stratum") {
-    val d = docs
-    val plan = d.cube("lang", "source")
-      .aggWithGroupingId("gid", ("n_chars", "count") -> "n")
-      .df.queryExecution.executedPlan.toString
+    // documents padded above SmallQueryRule's bound: the distributed plan
+    val plan = cubePlan(PsIO.readParquet(spark, TestSpark.paddedCopy(docs.df, 2L << 20)))
     assert("(?m)^.*Expand".r.findAllIn(plan).size == 1, plan)
     assert("Exchange".r.findAllIn(plan).size == 1, plan)
+  }
+
+  test("below MaxBytes, cube plans one Expand and no shuffle") {
+    val plan = cubePlan(docs)
+    assert("(?m)^.*Expand".r.findAllIn(plan).size == 1, plan)
+    assert("Exchange".r.findAllIn(plan).isEmpty, plan)
   }
 
   test("aggWithGroupingId on a plain groupby is rejected") {

@@ -76,11 +76,21 @@ class PlanLintSpec extends AnyFunSuite with SparkFixture {
     assert(!rules(narrow).contains("broadcast-wide-payload"), PlanLint.report(narrow))
   }
 
+  private def cleanAggregation(o: org.apache.spark.sql.DataFrame) =
+    o.filter(col("o_totalprice") > 1000).groupBy("o_orderpriority").agg(sum("o_totalprice"))
+
   test("clean aggregation draws only informational findings") {
-    val df = orders.filter(col("o_totalprice") > 1000)
-      .groupBy("o_orderpriority").agg(sum("o_totalprice"))
+    // orders padded above SmallQueryRule's bound: the aggregation shuffles
+    val df = cleanAggregation(spark.read.parquet(TestSpark.paddedCopy(orders, 2L << 20)))
     val warns = PlanLint.lint(df).filter(_.severity == "warn")
     assert(warns.isEmpty, warns.mkString("; "))
     assert(rules(df).contains("shuffle-count")) // the agg's exchange, reported
+  }
+
+  test("clean aggregation below MaxBytes draws no warning and no shuffle") {
+    val df = cleanAggregation(orders)
+    val warns = PlanLint.lint(df).filter(_.severity == "warn")
+    assert(warns.isEmpty, warns.mkString("; "))
+    assert(!rules(df).contains("shuffle-count"), PlanLint.report(df))
   }
 }

@@ -1,15 +1,19 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.exchange.{
+  BroadcastExchangeExec, REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{
+  BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.PsDataFrame
 import graft.operators.{Components, Dedup}
-import graft.plans.ConnectedComponentsExec
+import graft.plans.{ConnectedComponentsExec, SmallSortRule}
 import graft.sources.PsIO
 
 /** Plan-shape regression guards for the scale claims the docs make:
@@ -23,6 +27,21 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
 
   private def lineitem =
     PsIO.readParquet(spark, "/root/testdata/sf0.001/lineitem.parquet")
+
+  private def documents = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+
+  // sf0.001's rows padded to 2 MiB: above SmallQueryRule's bound, so the
+  // cases written for the distributed path still plan it
+  private lazy val bigDocuments = TestSpark.paddedCopy(documents, 2L << 20)
+  private lazy val bigLineitem = TestSpark.paddedCopy(lineitem.df, 2L << 20)
+  private lazy val bigOrders = TestSpark.paddedCopy(
+    PsIO.parquet(spark, "/root/testdata/sf0.001/orders.parquet"), 2L << 20)
+
+  private def shuffles(nodes: Seq[SparkPlan]) =
+    nodes.collect { case e: ShuffleExchangeExec => e }
+
+  private def broadcastHashJoins(nodes: Seq[SparkPlan]) =
+    nodes.collect { case j: BroadcastHashJoinExec => j }
 
   test("nlargest plans TakeOrderedAndProject, never a global sort") {
     val plan = lineitem.nlargest(15, Seq("l_extendedprice"))
@@ -222,7 +241,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // vocab still ends up broadcast (AQE/stats pick it); (b) with the
     // broadcast threshold disabled the join degrades to a shuffle join —
     // impossible if a hint were forcing it.
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val d = spark.read.parquet(bigDocuments)
     val ti = graft.functions.TextAnalysis.tfIdf(d, "doc_id", "text")
     assert(ti.count() > 0)
     val adaptive = ti.queryExecution.executedPlan.toString
@@ -236,6 +255,14 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
       assert(!plan.contains("BroadcastHashJoin"),
         s"vocab join still broadcasts with threshold=-1 — a forced hint is back:\n${plan.take(800)}")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("below MaxBytes, the tfIdf vocab join runs in one task: no shuffle, no broadcast hash join") {
+    val small = graft.functions.TextAnalysis.tfIdf(documents, "doc_id", "text")
+    val nodes = TestSpark.ranNodes(small)
+    assert(shuffles(nodes).isEmpty && broadcastHashJoins(nodes).isEmpty, nodes.head.treeString)
+    val big = graft.functions.TextAnalysis.tfIdf(spark.read.parquet(bigDocuments), "doc_id", "text")
+    assert(small.collect().toSet == big.collect().toSet)
   }
 
   test("valueCounts(normalize) computes its total without a window funnel") {
@@ -278,7 +305,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // anti-join; with a small corpus AQE must pick a broadcast, and with
     // the threshold disabled the same plan must degrade to a shuffled
     // join (proving no unconditional hint forces it)
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val d = spark.read.parquet(bigDocuments)
     def anti = graft.operators.Dedup.dedupAgainstCorpus(
       d.filter(col("doc_id") % 5 === 0), d.filter(col("doc_id") % 2 === 0), "text")
     assert(anti.count() > 0)
@@ -293,6 +320,19 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
       assert(!plan.contains("BroadcastHashJoin"),
         s"anti-join must degrade without broadcast, not be hint-forced:\n${plan.take(800)}")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("below MaxBytes, the dedupAgainstCorpus anti-join runs in one task, unbroadcast") {
+    def anti(d: DataFrame) = graft.operators.Dedup.dedupAgainstCorpus(
+      d.filter(col("doc_id") % 5 === 0), d.filter(col("doc_id") % 2 === 0), "text")
+    val nodes = TestSpark.ranNodes(anti(documents))
+    assert(shuffles(nodes).isEmpty && broadcastHashJoins(nodes).isEmpty, nodes.head.treeString)
+    assert(nodes.exists {
+      case j: ShuffledHashJoinExec => j.joinType == LeftAnti
+      case _ => false
+    }, nodes.head.treeString)
+    assert(anti(documents).collect().toSet ==
+      anti(spark.read.parquet(bigDocuments)).drop("pad").collect().toSet)
   }
 
   test("AQE splits a skewed join partition (the runtime skew answer)") {
@@ -394,16 +434,26 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     assert(coalesces(nodes).isEmpty, nodes.head.treeString)
   }
 
-  test("a sort over an inner join or an explode keeps its RangePartitioning") {
-    val li = lineitem.df
-    val orders = PsIO.parquet(spark, "/root/testdata/sf0.001/orders.parquet")
-    val joined = li.join(orders, li("l_orderkey") === orders("o_orderkey"))
+  private def sortedJoin(li: DataFrame, orders: DataFrame) =
+    li.join(orders, li("l_orderkey") === orders("o_orderkey"))
       .select("l_orderkey", "l_linenumber", "o_totalprice")
       .orderBy("l_orderkey", "l_linenumber")
-    val exploded = li.select(col("l_orderkey"), col("l_linenumber"),
-        explode(array(lit(1), lit(2))).as("x"))
+
+  private def sortedExplode(li: DataFrame) =
+    li.select(col("l_orderkey"), col("l_linenumber"), explode(array(lit(1), lit(2))).as("x"))
       .orderBy("l_orderkey", "l_linenumber", "x")
-    Seq(joined, exploded).foreach { q =>
+
+  private def sortedAnti(li: DataFrame, orders: DataFrame) = {
+    val third = orders.filter(col("o_orderkey") % 3 === 0)
+    li.join(third, li("l_orderkey") === third("o_orderkey"), "left_anti")
+      .select("l_orderkey", "l_linenumber").orderBy("l_orderkey", "l_linenumber")
+  }
+
+  private def smallOrders = PsIO.parquet(spark, "/root/testdata/sf0.001/orders.parquet")
+
+  test("a sort over an inner join or an explode keeps its RangePartitioning") {
+    val li = spark.read.parquet(bigLineitem)
+    Seq(sortedJoin(li, smallOrders), sortedExplode(li)).foreach { q =>
       val nodes = TestSpark.ranNodes(q)
       assert(rangeExchanges(nodes).nonEmpty, nodes.head.treeString)
       assert(coalesces(nodes).isEmpty, nodes.head.treeString)
@@ -411,14 +461,26 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("a sort over a left anti join is sized by its left side") {
-    val li = lineitem.df
-    val orders = PsIO.parquet(spark, "/root/testdata/sf0.001/orders.parquet")
-      .filter(col("o_orderkey") % 3 === 0)
-    val q = li.join(orders, li("l_orderkey") === orders("o_orderkey"), "left_anti")
-      .select("l_orderkey", "l_linenumber").orderBy("l_orderkey", "l_linenumber")
+    // the right side is above MaxBytes, the sorted left side far below it
+    val q = sortedAnti(lineitem.df, spark.read.parquet(bigOrders))
     val nodes = TestSpark.ranNodes(q)
     assert(coalesces(nodes) == Seq(1), nodes.head.treeString)
     assert(rangeExchanges(nodes).isEmpty, nodes.head.treeString)
+  }
+
+  test("below MaxBytes, a sort over a join, an explode or an anti join runs in one stage") {
+    val li = lineitem.df
+    val bigLi = spark.read.parquet(bigLineitem)
+    Seq(
+      sortedJoin(li, smallOrders) -> sortedJoin(bigLi, smallOrders),
+      sortedExplode(li) -> sortedExplode(bigLi),
+      sortedAnti(li, smallOrders) -> sortedAnti(bigLi, smallOrders)
+    ).foreach { case (q, distributed) =>
+      val nodes = TestSpark.ranNodes(q)
+      assert(shuffles(nodes).isEmpty && broadcastHashJoins(nodes).isEmpty,
+        nodes.head.treeString)
+      assert(q.collect().toSeq == distributed.collect().toSeq)
+    }
   }
 
   test("repartitionByRange(4, k) keeps its 4 partitions") {
@@ -428,5 +490,81 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     assert(rangeExchanges(nodes).map(_.outputPartitioning.numPartitions) == Seq(4),
       nodes.head.treeString)
     assert(q.distinct().collect().length == 4)
+  }
+
+  // ---- SmallQueryRule: sub-MiB file-scan queries in one stage -------
+
+  private def flagSums(df: DataFrame) =
+    df.groupBy("l_returnflag").agg(sum("l_quantity").as("s"))
+
+  test("SmallQueryRule: a small plan that reads the partition layout keeps its exchanges") {
+    val li = lineitem.df
+    Seq(
+      flagSums(li).withColumn("p", spark_partition_id()),
+      flagSums(li.filter(rand(1) < 0.5)),
+      flagSums(li).withColumn("m", monotonically_increasing_id())
+    ).foreach { q =>
+      val nodes = TestSpark.ranNodes(q)
+      assert(shuffles(nodes).nonEmpty && coalesces(nodes).isEmpty, nodes.head.treeString)
+    }
+    val nodes = TestSpark.ranNodes(flagSums(li))
+    assert(shuffles(nodes).isEmpty && coalesces(nodes) == Seq(1), nodes.head.treeString)
+  }
+
+  test("SmallQueryRule: repartition(n) and repartitionByRange(n, k) keep n partitions") {
+    val li = lineitem.df
+    Seq(li.repartition(4), li.repartitionByRange(4, col("l_orderkey"))).foreach { q =>
+      val sizes = q.rdd.mapPartitions(rows => Iterator(rows.size)).collect()
+      assert(sizes.length == 4 && sizes.forall(_ > 0), sizes.mkString(", "))
+      // an aggregation above it loses its own exchange, never the user's
+      val nodes = TestSpark.ranNodes(flagSums(q))
+      assert(shuffles(nodes).map(e => (e.shuffleOrigin, e.outputPartitioning.numPartitions))
+        == Seq((REPARTITION_BY_NUM, 4)), nodes.head.treeString)
+    }
+  }
+
+  test("SmallQueryRule: a NOT IN (null-aware anti) join keeps its broadcast") {
+    lineitem.df.createOrReplaceTempView("li_small")
+    smallOrders.createOrReplaceTempView("orders_small")
+    val q = spark.sql("SELECT l_orderkey, l_linenumber FROM li_small WHERE l_orderkey " +
+      "NOT IN (SELECT o_orderkey FROM orders_small WHERE o_orderkey % 3 = 0)")
+    val nodes = TestSpark.ranNodes(q)
+    assert(broadcastHashJoins(nodes).map(_.isNullAwareAntiJoin) == Seq(true),
+      nodes.head.treeString)
+    assert(nodes.exists(_.isInstanceOf[BroadcastExchangeExec]), nodes.head.treeString)
+    assert(q.count() == sortedAnti(lineitem.df, smallOrders).count())
+  }
+
+  test("SmallQueryRule: a plan with a leaf that is not a file scan is unchanged") {
+    val s = spark
+    import s.implicits._
+    val flags = Seq(("N", 1), ("R", 2), ("A", 3)).toDF("flag", "code")
+    val local = lineitem.df.join(flags, col("l_returnflag") === col("flag"))
+      .groupBy("code").count()
+    val range = spark.range(1000).groupBy(col("id") % 3).count()
+    Seq(local, range).foreach { q =>
+      val nodes = TestSpark.ranNodes(q)
+      assert(shuffles(nodes).nonEmpty && coalesces(nodes).isEmpty, nodes.head.treeString)
+      assert(!nodes.exists(_.isInstanceOf[ShuffledHashJoinExec]), nodes.head.treeString)
+    }
+    assert(broadcastHashJoins(TestSpark.ranNodes(local)).size == 1)
+  }
+
+  test("SmallQueryRule: an input just over MaxBytes is unchanged, just under runs in one stage") {
+    val bound = SmallSortRule.MaxBytes
+    def bytes(dir: String) =
+      SmallSortRule.scanBytes(spark.read.parquet(dir).queryExecution.analyzed).get
+    val over = TestSpark.paddedCopy(lineitem.df, bound + (16L << 10))
+    val under = TestSpark.paddedCopy(lineitem.df, bound - (16L << 10))
+    assert(bytes(over) > bound && bytes(over) < bound + (64L << 10), bytes(over))
+    assert(bytes(under) < bound && bytes(under) > bound - (64L << 10), bytes(under))
+    val overNodes = TestSpark.ranNodes(flagSums(spark.read.parquet(over)))
+    assert(shuffles(overNodes).nonEmpty && coalesces(overNodes).isEmpty,
+      overNodes.head.treeString)
+    val underNodes = TestSpark.ranNodes(flagSums(spark.read.parquet(under)))
+    assert(shuffles(underNodes).isEmpty && coalesces(underNodes) == Seq(1),
+      underNodes.head.treeString)
+    assert(flagSums(spark.read.parquet(over)).collect().toSet ==
+      flagSums(spark.read.parquet(under)).collect().toSet)
   }
 }

@@ -38,6 +38,33 @@ object TestSpark {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** A parquet copy of `src` at `<fresh temp dir>/<name>` whose files
+    * hold about `bytes` bytes: `src`'s rows and columns plus `pad`, one
+    * binary column of seeded random, so incompressible, bytes that no
+    * query reads. A query over the copy returns what it returns over
+    * `src`, on whichever side of a byte bound `bytes` lies; callers that
+    * need the exact size read it with `SmallSortRule.scanBytes`. */
+  def paddedCopy(src: org.apache.spark.sql.DataFrame, bytes: Long,
+      name: String = "t"): String = {
+    import org.apache.spark.sql.functions.{monotonically_increasing_id, udf}
+    val dir = java.nio.file.Files.createTempDirectory("graft-padded").resolve(name).toString
+    val rows = src.count()
+    def written(perRow: Int): Long = {
+      val noise = udf { (k: Long) =>
+        val b = new Array[Byte](perRow); new java.util.Random(k).nextBytes(b); b
+      }
+      src.withColumn("pad", noise(monotonically_increasing_id()))
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      graft.plans.SmallSortRule.scanBytes(
+        spark.read.parquet(dir).queryExecution.analyzed).get
+    }
+    // the file size is close to linear in the pad: one correction lands it
+    val first = math.max(1L, bytes / rows).toInt
+    val got = written(first)
+    written(math.max(1L, first + (bytes - got) / rows).toInt)
+    dir
+  }
+
   /** Every node `df` ran, query stages included: `collect()`s it (not
     * count(), which plans a query of its own), then walks AQE's final
     * plan. */
